@@ -24,11 +24,20 @@ path):
         invisible to resume)
     <root>/<run_id>/lineage/                 parquet, appended per superstep:
         (run_id, superstep, partition_id, rows, bytes, ms) — one row per
-        WRITTEN partition file: rows counted per output file, bytes from
-        the file's actual length (r1 recomputed partition ids on the
-        re-read scan, which described the read layout, not the write).
+        WRITTEN partition file: rows from the file's parquet footer,
+        bytes from its actual length, both read on the driver from the
+        one listing of the snapshot directory (r1 recomputed partition
+        ids on the re-read scan, which described the read layout, not
+        the write). ``ms`` times the state write alone.
     <root>/<run_id>/supersteps/<k>.json      driver-side metrics, one
         object per superstep (append-free: object stores can't append)
+
+A durable superstep submits two jobs besides its barrier
+aggregate: the snapshot write (the superstep's materializing action)
+and the one-task lineage append. The snapshot is read back with its
+known schema (no inference job), and the lineage rows are literals in
+a JVM-side relation, so no job re-scans the snapshot and no Python
+worker runs.
 
 Checkpoint read-back also truncates lineage growth: the returned
 DataFrames are fresh parquet scans with single-node plans, replacing an
@@ -95,14 +104,6 @@ class CheckpointStore:
             return []
         return [st.getPath().getName() for st in fs.listStatus(self._hpath(p))]
 
-    def _file_sizes(self, p: str) -> dict[str, int]:
-        fs = self._fs(p)
-        return {
-            st.getPath().getName(): int(st.getLen())
-            for st in fs.listStatus(self._hpath(p))
-            if st.isFile()
-        }
-
     # ----------------------------------------------------------------------
     def _step_dir(self, superstep: int) -> str:
         return f"{self.base}/superstep={superstep}"
@@ -126,50 +127,56 @@ class CheckpointStore:
             frontier.write.mode("overwrite").parquet(f"{d}/frontier")
         ms = (time.monotonic() - t0) * 1000.0
 
-        new_state = self.spark.read.parquet(f"{d}/state")
+        # read back with the known schema: no schema-inference job (the
+        # read forces every field nullable, exactly as inference would)
+        new_state = self.spark.read.schema(state.schema).parquet(f"{d}/state")
         if frontier is not None:
-            new_frontier = self.spark.read.parquet(f"{d}/frontier")
+            new_frontier = self.spark.read.schema(frontier.schema).parquet(
+                f"{d}/frontier"
+            )
 
-        self._write_lineage(superstep, new_state, ms)
+        self._write_lineage(superstep, ms)
         # commit marker LAST: resume only ever sees complete snapshots
         self._write_text(
             f"{d}/{MARKER}", json.dumps({"superstep": superstep, "ms": ms})
         )
         return new_state, new_frontier
 
-    def _write_lineage(self, superstep: int, state_scan: DataFrame, ms: float) -> None:
-        """One lineage row per WRITTEN partition file: rows counted per
-        output file (input_file_name over the fresh scan), bytes from the
-        file's length on the target filesystem."""
+    def _write_lineage(self, superstep: int, ms: float) -> None:
+        """One lineage row per WRITTEN partition file: rows from the
+        file's parquet footer, bytes from its length on the target
+        filesystem. The append is the only job this submits."""
         state_dir = f"{self._step_dir(superstep)}/state"
-        sizes = {
-            name: n
-            for name, n in self._file_sizes(state_dir).items()
-            if name.startswith("part-")
-        }
-        fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
-        rows_per_file = {
-            r["fname"]: r["rows"]
-            for r in state_scan.groupBy(fname.alias("fname"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
-        records = []
-        for name, nbytes in sorted(sizes.items()):
-            m = re.match(r"part-(\d+)", name)
-            if not m:
+        parquet = self._jvm.org.apache.parquet.hadoop
+        structs = []
+        statuses = self._fs(state_dir).listStatus(self._hpath(state_dir))
+        for st in sorted(statuses, key=lambda st: st.getPath().getName()):
+            m = re.match(r"part-(\d+)", st.getPath().getName())
+            if not (st.isFile() and m):
                 continue
-            records.append(
-                (
-                    self.run_id,
-                    int(superstep),
-                    int(m.group(1)),
-                    int(rows_per_file.get(name, 0)),
-                    int(nbytes),
-                    float(ms),
+            reader = parquet.ParquetFileReader.open(
+                parquet.util.HadoopInputFile.fromStatus(st, self._jconf)
+            )
+            try:
+                rows = reader.getRecordCount()
+            finally:
+                reader.close()
+            structs.append(
+                F.struct(
+                    F.lit(self.run_id),
+                    F.lit(superstep),
+                    F.lit(int(m.group(1))),
+                    F.lit(rows),
+                    F.lit(st.getLen()),
+                    F.lit(ms),
                 )
             )
-        per_part = self.spark.createDataFrame(records, schema=_LINEAGE_SCHEMA)
+        # the cast gives every field (and an empty array) _LINEAGE_SCHEMA's
+        # type and nullability, so the parquet footer matches as well
+        lineage_rows = T.ArrayType(_LINEAGE_SCHEMA, containsNull=False)
+        per_part = self.spark.range(1, numPartitions=1).select(
+            F.inline(F.array(*structs).cast(lineage_rows))
+        )
         per_part.coalesce(1).write.mode("append").parquet(f"{self.base}/lineage")
 
     def log_superstep(self, metrics: dict) -> None:

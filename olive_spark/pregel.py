@@ -278,23 +278,6 @@ class PregelResult:
 _PREGEL_RUN_COUNTER = itertools.count()
 
 
-def _snapshot_every() -> int:
-    """OLIVE_SNAPSHOT_EVERY: localCheckpoint every k-th superstep
-    (default 1 = every superstep). k>1 trades the per-superstep
-    snapshot cost for ~2x recompute of skipped supersteps (state is
-    referenced twice downstream) — an A/B lever for the scaling
-    campaigns, not a recommended setting."""
-    import os
-
-    v = os.environ.get("OLIVE_SNAPSHOT_EVERY")
-    if not v:
-        return 1
-    k = int(v)
-    if k < 1:
-        raise ValueError(f"OLIVE_SNAPSHOT_EVERY={v!r} must be >= 1")
-    return k
-
-
 def _local_ckpt(df: DataFrame) -> DataFrame:
     """Lazy localCheckpoint with an optionally overridden storage level.
 
@@ -661,9 +644,6 @@ def _pregel_impl(
     metrics: list[dict] = []
     converged = False
     free_failures = 0
-    # last MATERIALIZED snapshot (with OLIVE_SNAPSHOT_EVERY>1 some
-    # states are lazy plans; only a materialized successor may free it)
-    last_snapshot = state
 
     # loop-invariant Column trees, built once (r6: the per-superstep
     # py4j construction was ~85ms of a ~0.4s superstep)
@@ -700,23 +680,13 @@ def _pregel_impl(
             checkpoint_store is not None
             and (superstep + 1) % checkpoint_every == 0
         )
-        snapshotted = True
         if durable:
             # superstep+1 = the number of completed supersteps this state
             # reflects (superstep increments just below). The parquet
             # write is the materializing action on the durable path.
             new_state, _ = checkpoint_store.checkpoint(superstep + 1, new_state, None)
-        elif (superstep + 1) % _snapshot_every() == 0:
-            new_state = _local_ckpt(new_state)
         else:
-            # A/B lever (OLIVE_SNAPSHOT_EVERY>1): skip the snapshot this
-            # superstep. The state stays a lazy plan referenced TWICE by
-            # the next superstep (frontier join + vertex join), so the
-            # un-snapshotted superstep's work is recomputed ~2x per skip
-            # — measured a net loss at k>=2 (BENCH.md "rejected
-            # optimizations"), kept only to A/B the snapshot term per
-            # the r3 verdict; default (1) snapshots every superstep.
-            snapshotted = False
+            new_state = _local_ckpt(new_state)
 
         # ---- the ONE barrier action per superstep ------------------------
         # Materializes the (lazy) snapshot, counts the next frontier, and
@@ -725,16 +695,12 @@ def _pregel_impl(
         # D2H vertexReduce fold (oliver.h:176-183), fused.
         row = new_state.agg(*barrier_aggs).first()
 
+        # the new state is materialized; the previous snapshot is no
+        # longer referenced — drop it
+        if not _free_checkpoint(state):
+            free_failures += 1
         state = new_state
         superstep += 1
-        if snapshotted:
-            # new state is materialized; the previous snapshot (not
-            # necessarily last superstep's state, which may be lazy) is
-            # no longer referenced — drop it
-            if last_snapshot is not state:
-                if not _free_checkpoint(last_snapshot):
-                    free_failures += 1
-            last_snapshot = state
 
         # ---- termination ------------------------------------------------
         step_metrics = {"superstep": superstep, "ms": None, "active": None}

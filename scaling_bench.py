@@ -217,7 +217,7 @@ def main():
     # recorded so campaign tables are self-describing
     knobs = {
         k: os.environ[k]
-        for k in ("OLIVE_SNAPSHOT_LEVEL", "OLIVE_SNAPSHOT_EVERY")
+        for k in ("OLIVE_SNAPSHOT_LEVEL",)
         if os.environ.get(k)
     }
     knob_note = f" [env: {knobs}]" if knobs else ""

@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import re
+
 import numpy as np
+from pyspark.sql import functions as F
 
 from olive_spark.algorithms.pagerank import pagerank
 from olive_spark.algorithms.bfs import bfs
-from olive_spark.checkpoint import CheckpointStore
+from olive_spark.checkpoint import _LINEAGE_SCHEMA, CheckpointStore
 from olive_spark.fixtures import grid_graph, chain_graph
 from olive_spark.graph import Graph
 
@@ -158,3 +162,81 @@ def test_lineage_attributes_written_partitions(spark, tmp_path):
         for f in os.listdir(state_dir) if f.startswith("part-")
     )
     assert sum(r["bytes"] for r in lin) == disk
+
+
+def _part_id(path):
+    return int(re.match(r"part-(\d+)", os.path.basename(path)).group(1))
+
+
+def test_lineage_rows_match_written_files(spark, tmp_path):
+    """Each lineage row describes one written file: its ``rows`` equal
+    that file's row count in a scan, its ``bytes`` the file's length, and
+    partition ids are distinct. The state has four partitions, one of
+    them empty, so several files are seen and one partition writes none
+    (Spark writes a schema-only file for an empty partition 0 only)."""
+    state = (
+        spark.range(0, 40, 1, 4)
+        .filter("id < 20 OR id >= 30")
+        .withColumn("x", F.col("id") * 0.5)
+    )
+    assert [len(p) for p in state.rdd.glom().collect()] == [10, 10, 0, 10]
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_files"), run_id="r7")
+    snap, _ = store.checkpoint(1, state)
+
+    lin = store.lineage().collect()
+    scanned = {
+        _part_id(r["f"]): r["n"]
+        for r in snap.groupBy(F.input_file_name().alias("f")).agg(F.count("*").alias("n")).collect()
+    }
+    state_dir = store._step_dir(1) + "/state"
+    on_disk = {
+        _part_id(f): os.path.getsize(os.path.join(state_dir, f))
+        for f in os.listdir(state_dir) if f.startswith("part-")
+    }
+    assert sorted(on_disk) == [0, 1, 3]
+    assert {r["partition_id"]: r["rows"] for r in lin} == scanned
+    assert {r["partition_id"]: r["bytes"] for r in lin} == on_disk
+    assert len({r["partition_id"] for r in lin}) == len(lin)
+    assert {(r["run_id"], r["superstep"]) for r in lin} == {("r7", 1)}
+
+
+def test_lineage_of_empty_snapshot(spark, tmp_path):
+    """A zero-row state still appends a typed lineage row: the single
+    schema-only file Spark writes, with 0 rows and its real length."""
+    state = spark.range(0, 0, 1, 4).withColumn("x", F.col("id") * 0.5)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_empty"), run_id="r8")
+    snap, _ = store.checkpoint(1, state)
+    assert snap.count() == 0
+
+    lin = store.lineage()
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in _LINEAGE_SCHEMA
+    ]
+    state_dir = store._step_dir(1) + "/state"
+    (only,) = [f for f in os.listdir(state_dir) if f.startswith("part-")]
+    assert [tuple(r)[:5] for r in lin.collect()] == [
+        ("r8", 1, _part_id(only), 0, os.path.getsize(os.path.join(state_dir, only)))
+    ]
+
+
+def test_durable_superstep_has_no_python_round_trip(spark, tmp_path, monkeypatch):
+    """No driver rows go through a Python RDD on the durable path: once
+    the graph is built, a durable PageRank runs with
+    ``SparkContext.parallelize`` disabled."""
+    from pyspark import SparkContext
+
+    n, e = grid_graph()
+    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    g.edges.count()
+
+    def no_parallelize(*args, **kwargs):
+        raise AssertionError("SparkContext.parallelize on the durable path")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_parallelize)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_jvm"), run_id="r9")
+    res = pagerank(g, epsilon=None, max_iterations=2, checkpoint_store=store)
+    assert res.supersteps == 2
+    assert store.latest_superstep() == 2
+    per_step = {r["superstep"]: r["total"] for r in
+                store.lineage().groupBy("superstep").agg(F.sum("rows").alias("total")).collect()}
+    assert per_step == {1: n, 2: n}

@@ -67,10 +67,21 @@ def test_fixture_matches_reference_file(name):
     assert sorted(e) == sorted(e_ref)
 
 
+def _write_grid_file(tmp_path):
+    """gridGraph_15 in the reference text format (csrGraph.h:87-105): an
+    'N M' header line, then one 'src dst weight' row per edge. The
+    weights are not 1, so the loader's weight discard is observable."""
+    n, edges = all_fixtures()["gridGraph_15"]
+    path = tmp_path / "gridGraph_15"
+    lines = [f"{n} {len(edges)}"] + [f"{s} {d} {(s + d) % 7 + 2}" for s, d in edges]
+    path.write_text("\n".join(lines) + "\n")
+    return str(path)
+
+
 def test_edge_list_file_loader(spark, tmp_path):
     """Distributed loader parses the reference text format (csrGraph.h:87-105),
     discarding weights (csrGraph.h:139)."""
-    src = os.path.join(REF_DATA, "gridGraph_15")
+    src = _write_grid_file(tmp_path)
     g = Graph.from_edge_list_file(spark, src, num_partitions=4)
     assert g.vertex_count() == 15
     assert g.edge_count() == 44
@@ -82,10 +93,10 @@ def test_edge_list_file_loader(spark, tmp_path):
     assert got == sorted(exp)
 
 
-def test_edge_list_file_loader_uri_scheme(spark):
+def test_edge_list_file_loader_uri_scheme(spark, tmp_path):
     """The header read goes through the Hadoop FS API (judge r2 #4):
     a file:// URI — the object-store code path — loads identically."""
-    src = os.path.join(REF_DATA, "gridGraph_15")
+    src = _write_grid_file(tmp_path)
     g = Graph.from_edge_list_file(spark, f"file://{src}", num_partitions=4)
     assert g.vertex_count() == 15
     assert g.edge_count() == 44
