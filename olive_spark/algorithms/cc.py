@@ -15,10 +15,11 @@ frontiers against the cached edge table.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
-from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, src
+from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, run_loop, src
 
 
 def connected_components(
@@ -73,7 +74,7 @@ def connected_components_stars(
     max_rounds: int = 50,
     symmetrize: bool = True,
     round_metrics: list | None = None,
-) -> "DataFrame":
+) -> DataFrame:
     """Connected components via alternating large-star/small-star
     contraction — O(log n) rounds instead of O(diameter) supersteps.
 
@@ -86,8 +87,10 @@ def connected_components_stars(
     set is a star forest rooted at component minima.
 
     Per round: two groupBy(u).min + join passes over the (shrinking)
-    edge set; convergence detected by an order-insensitive checksum of
-    the edge multiset (one cheap aggregate action per round).
+    edge set. The round loop is :func:`olive_spark.pregel.run_loop`
+    over the canonical edge set; convergence is detected by an
+    order-insensitive checksum of the edge multiset, folded into the
+    round's one barrier action.
 
     Returns a DataFrame (id, component) — exact, same contract as
     `connected_components(...).state`.
@@ -97,29 +100,21 @@ def connected_components_stars(
     can record the O(log n) convergence directly (the per-round edge
     count comes from the convergence checksum — no extra job).
     """
-    import time as _time
-    from pyspark.sql import DataFrame
+    def canonical(df: DataFrame, p: int) -> DataFrame:
+        # undirected pairs as (u > v), deduplicated, partitioned by u:
+        # the small-star input convention
+        return (
+            df.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+            .distinct()
+            .repartition(p, "u")
+        )
 
-    spark = graph.edges.sparkSession
-    p = graph.num_partitions
-
-    e = graph.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if symmetrize:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # canonical undirected pairs (u > v): small-star input convention
-    edges = (
-        e.select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v"))
-        .distinct()
-        .repartition(p, "u")
-        .localCheckpoint(eager=True)
-    )
-
-    def checksum(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v") % F.lit(1_000_000_007)).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
+    def init(g: Graph) -> DataFrame:
+        e = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        e = e.filter(F.col("u") != F.col("v"))
+        if symmetrize:
+            e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        return canonical(e, g.num_partitions)
 
     def large_star(df: DataFrame) -> DataFrame:
         # neighborhoods over BOTH directions; connect strictly-larger
@@ -145,43 +140,27 @@ def connected_components_stars(
         out = nbrs.unionByName(selfe)
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    from olive_spark.pregel import _free_checkpoint, stable_partitioning
+    def step(g: Graph, edges: DataFrame, _row, _snap) -> DataFrame:
+        ls = large_star(edges)
+        ss = small_star(
+            ls.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")).distinct()
+        )
+        return canonical(ss, g.num_partitions)
 
-    # iterative co-partitioned joins: keep partition counts stable and
-    # let the per-round eager localCheckpoints record their hash(u, P)
-    # partitioning (see stable_partitioning — under AQE the snapshots
-    # report unknown partitioning and every round re-exchanges)
-    with stable_partitioning(spark, disable_aqe=True):
-        prev_sum = checksum(edges)
-        for rnd in range(max_rounds):
-            t0 = _time.monotonic()
-            ls = large_star(edges)
-            ss = small_star(
-                ls.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")).distinct()
-            )
-            new_edges = (
-                ss.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-                .distinct()
-                .repartition(p, "u")
-                .localCheckpoint(eager=True)
-            )
-            new_sum = checksum(new_edges)
-            _free_checkpoint(edges)
-            edges = new_edges
-            if round_metrics is not None:
-                round_metrics.append(
-                    {
-                        "round": rnd + 1,
-                        "edges": int(new_sum[0]),
-                        "ms": round((_time.monotonic() - t0) * 1000.0, 1),
-                    }
-                )
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
+    res = run_loop(
+        graph, init, step,
+        [F.count("*").alias("active"),
+         F.sum(F.xxhash64("u", "v") % F.lit(1_000_000_007)).alias("h")],
+        lambda row, prev, _n: row == prev, max_rounds,
+    )
+    if round_metrics is not None:
+        round_metrics.extend(
+            {"round": m["superstep"], "edges": m["active"], "ms": round(m["ms"], 1)}
+            for m in res.metrics
+        )
 
     # star forest: every u points at its root v; isolated vertices map to self
-    roots = edges.groupBy("u").agg(F.min("v").alias("component")).select(
+    roots = res.state.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("id"), "component"
     )
     out = (

@@ -15,19 +15,20 @@ well-defined whether or not the fixpoint was reached).
 Scale design — DELTA peeling, not edge-set rewriting (round-2 judge
 finding #2: the rewrite version re-exchanged the E-sized symmetrized
 table on the dst side every round):
-- The symmetrized adjacency is hash-partitioned by src, sorted and
-  cached ONCE; it is never rewritten or re-shuffled.
+- The symmetrized adjacency is the graph's memoized
+  ``Graph.symmetrized()`` closure (edges ∪ reversed, hash-partitioned
+  by src and cached once, shared with CC and label propagation); it is
+  never rewritten or re-shuffled.
 - Per round, only the newly-peeled frontier joins the cached adjacency
   (probe in place, shuffle_hash on the narrow side — the same shape as
-  the pregel edge phase, pregel.py:310-332) and sends one decrement
-  message per incident edge; survivors subtract the map-side-combined
-  decrement count. Messages to already-removed vertices are dropped
-  (their deg stays frozen at its peel-time value).
+  the pregel edge phase) and sends one decrement message per incident
+  edge; survivors subtract the map-side-combined decrement count.
+  Messages to already-removed vertices are dropped (their deg stays
+  frozen at its peel-time value).
 - Per-round data volume is O(edges incident to the peeled set), not
   O(E): asymptotically cheaper than recomputing degrees each round.
-- ONE barrier action per round (counts peels + their degrees, which
-  doubles as the snapshot materialization); lineage truncated via lazy
-  localCheckpoint, superseded snapshots freed.
+- The round loop is :func:`olive_spark.pregel.run_loop`; its one
+  barrier per round counts the peels and sums their degrees.
 
 Equivalence with recompute-peeling (delta invariant): state deg(v) is
 maintained as v's degree in the induced subgraph on current survivors
@@ -40,13 +41,13 @@ peeled had induced degree 0, i.e. sum of peel-time degrees == 0.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
-from olive_spark.pregel import _free_checkpoint, stable_partitioning
+from olive_spark.pregel import run_loop
 
 
 @dataclass
@@ -54,6 +55,9 @@ class KCoreResult:
     state: DataFrame  # (id, in_core)
     rounds: int
     converged: bool
+    # per-round records and snapshot-free failures, as PregelResult
+    metrics: list[dict] = field(default_factory=list)
+    free_failures: int = 0
 
 
 def kcore(graph: Graph, k: int, max_rounds: int = 100) -> KCoreResult:
@@ -66,100 +70,58 @@ def kcore(graph: Graph, k: int, max_rounds: int = 100) -> KCoreResult:
         # 0-core = every vertex (including isolated ones)
         state = graph.vertices.select("id", F.lit(True).alias("in_core"))
         return KCoreResult(state=state, rounds=0, converged=True)
-    # shuffle width pinned to the graph's layout so the per-round message
-    # aggregate lands co-partitioned with the peel state by construction
-    # (same policy as pregel/hits, r6)
-    with stable_partitioning(graph.edges.sparkSession, disable_aqe=True,
-                             shuffle_partitions=graph.num_partitions):
-        return _kcore_impl(graph, k, max_rounds)
+    peel = ~F.col("removed") & (F.col("deg") < k)
 
-
-def _kcore_impl(graph: Graph, k: int, max_rounds: int) -> KCoreResult:
-    edges = graph.edges
-    # cached vertex table directly — the peel state's degree column is
-    # the SYMMETRIZED degree computed below, not graph.degrees()
-    verts = graph.vertices
-    P = graph.num_partitions
-
-    # One-time layout: symmetrized closure, partitioned by src, cached.
-    # Never touched again except as the probe side of the frontier join.
-    # No sortWithinPartitions (r6): the only consumers are hinted
-    # shuffled-hash joins — the 2E-row per-partition sort served nothing
-    # (same dead-sort finding as the main edge cache / symmetrized /
-    # reversed layouts).
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(P, "src")
-        .cache()
-    )
-
-    # state (id, deg, removed): deg = degree in the induced subgraph on
-    # current survivors; isolated vertices enter at deg 0. The hinted
-    # shuffled-hash probe of the V-row deg0 side preserves the cached
-    # vertex table's hash(id, P) through the left join, so the old
-    # trailing repartition(P, id) was a redundant V-row exchange
-    # (same finding as Graph.degrees(), r6).
-    deg0 = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    state = (
-        verts.join(deg0.hint("shuffle_hash"), verts["id"] == deg0["src"], "left")
-        .select(
+    def init(g: Graph) -> DataFrame:
+        # state (id, deg, removed): deg = degree in the induced subgraph
+        # on current survivors; isolated vertices enter at deg 0. The
+        # hinted shuffled-hash probe of the V-row deg0 side preserves
+        # the cached vertex table's hash(id, P) through the left join.
+        # The init barrier scans the closure, so round 1 plans against
+        # a materialized cache (and its final partitioning).
+        deg0 = g.edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        return g.vertices.join(
+            deg0.hint("shuffle_hash"), g.vertices["id"] == deg0["src"], "left"
+        ).select(
             "id",
             F.coalesce("deg", F.lit(0)).alias("deg"),
             F.lit(False).alias("removed"),
+            F.lit(0).alias("_peeled"),
+            F.lit(0).alias("_peel_deg"),
         )
-        .localCheckpoint(eager=False)
-    )
-    # Materialize init state AND (via the deg0 scan) the sym cache in one
-    # action: round-1 plans must see the cache's finalized hash
-    # partitioning, or they would re-exchange it (plan_audit_r3.py).
-    state.count()
 
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
-        # newly-peeled frontier: survivors below k (lazy — evaluated off
-        # the materialized snapshot, referenced twice without recompute)
-        peel = state.filter(~F.col("removed") & (F.col("deg") < k)).select("id")
+    def step(g: Graph, state: DataFrame, _row, _snap) -> DataFrame:
+        # newly-peeled frontier: survivors below k (evaluated off the
+        # materialized snapshot, referenced twice without recompute)
         msgs = (
-            peel.hint("shuffle_hash")
-            .alias("p")
-            .join(sym.alias("e"), F.col("p.id") == F.col("e.src"))
+            state.filter(peel).select("id").hint("shuffle_hash").alias("p")
+            .join(g.edges.alias("e"), F.col("p.id") == F.col("e.src"))
             .groupBy(F.col("e.dst").alias("id"))
             .agg(F.count(F.lit(1)).alias("dec"))
         )
-        peel_cond = ~F.col("removed") & (F.col("deg") < k)
-        new_state = (
-            state.join(msgs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                # removed vertices keep their peel-time deg frozen
-                # (decrements from later-peeled neighbors would drive it
-                # negative — harmless but confusing in dumps)
-                F.when(
-                    F.col("removed"), F.col("deg")
-                ).otherwise(F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
-                (F.col("removed") | (F.col("deg") < k)).alias("removed"),
-                peel_cond.cast("long").alias("_peeled"),
-                F.when(peel_cond, F.col("deg")).otherwise(F.lit(0)).alias("_peel_deg"),
-            )
-            .localCheckpoint(eager=False)
+        return state.join(msgs.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            # removed vertices keep their peel-time deg frozen
+            # (decrements from later-peeled neighbors would drive it
+            # negative — harmless but confusing in dumps)
+            F.when(F.col("removed"), F.col("deg"))
+            .otherwise(F.col("deg") - F.coalesce("dec", F.lit(0))).alias("deg"),
+            (F.col("removed") | (F.col("deg") < k)).alias("removed"),
+            peel.cast("long").alias("_peeled"),
+            F.when(peel, F.col("deg")).otherwise(F.lit(0)).alias("_peel_deg"),
         )
-        # the ONE barrier action: materializes the snapshot and computes
-        # (#peeled, sum of their peel-time degrees) in the same job.
-        row = new_state.agg(
-            F.sum("_peeled").alias("n"), F.sum("_peel_deg").alias("d")
-        ).first()
-        rounds += 1
-        _free_checkpoint(state)
-        state = new_state
-        # fixpoint test identical to the oracle's "no edge removed":
-        # every peel this round (possibly zero of them) had degree 0.
-        if int(row["d"] or 0) == 0:
-            converged = True
-            break
 
-    out = state.select("id", (~F.col("removed")).alias("in_core"))
-    result = KCoreResult(state=out, rounds=rounds, converged=converged)
-    sym.unpersist()
-    return result
+    # fixpoint test identical to the oracle's "no edge removed": every
+    # peel this round (possibly zero of them) had degree 0.
+    res = run_loop(
+        graph.symmetrized(), init, step,
+        [F.sum("_peeled").alias("active"), F.sum("_peel_deg").alias("d")],
+        lambda row, _prev, _n: not row["d"], max_rounds,
+    )
+    return KCoreResult(
+        state=res.state.select("id", (~F.col("removed")).alias("in_core")),
+        rounds=res.supersteps,
+        converged=res.converged,
+        metrics=res.metrics,
+        free_failures=res.free_failures,
+    )

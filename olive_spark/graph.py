@@ -370,8 +370,8 @@ class Graph:
             # Materialize NOW: until the cache is built, AQE reports the
             # relation's partitioning as unknown, and the first round's
             # join plan would re-exchange the E-sized side — exactly the
-            # cost this layout exists to remove (verified by
-            # scripts/plan_audit_r3.py).
+            # cost this layout exists to remove (pinned by
+            # tests/test_loop_plans.py).
             self._reversed.count()
         return self._reversed
 

@@ -7,13 +7,15 @@ shuffle read/write (the exchange IS the outbox/inbox,
 messageBox.h:90-105), and of the "comp" term is executor run/CPU time
 net of shuffle waits.
 
-Collection strategy: every superstep's jobs are tagged with a unique
-job-group id (a driver-side local property — zero executor overhead);
-after the superstep's barrier action, the driver reads the stage-level
-totals for exactly those jobs from the SparkContext's AppStatusStore
+Collection strategy: every superstep's jobs carry a unique Spark job
+tag (a driver-side local property — zero executor overhead); after the
+superstep's barrier action, the driver reads the stage-level totals for
+exactly those jobs from the SparkContext's AppStatusStore
 (the same in-memory store that backs the Spark UI / REST API, present
 in every deployment mode — no listener registration, no callback
-server). Stages shared between jobs are counted once.
+server). Stages shared between jobs are counted once. Tags, unlike a
+job group, stack: a caller's job group (and ``sc.cancelJobGroup``) and
+any enclosing collector's tag stay on the same jobs.
 
 All methods are best-effort: a metrics read must never fail the
 superstep loop, so errors degrade to absent fields.
@@ -23,17 +25,15 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-#: job-group property key (standard Spark local property)
-_GROUP_KEY = "spark.jobGroup.id"
-
 
 class SuperstepMetricsCollector:
-    """Tags superstep jobs with a job group and reads their aggregate
+    """Tags superstep jobs with a job tag and reads their aggregate
     shuffle/compute stage metrics back from the AppStatusStore."""
 
     def __init__(self, spark: SparkSession, prefix: str):
         self._sc = spark.sparkContext
         self._prefix = prefix
+        self._tag: str | None = None
         try:
             self._store = spark._jsparkSession.sparkContext().statusStore()
         except Exception:
@@ -41,20 +41,33 @@ class SuperstepMetricsCollector:
 
     def tag(self, superstep: int) -> None:
         """Mark all jobs submitted from now (on this driver thread) as
-        belonging to ``superstep``."""
+        belonging to ``superstep``, in place of this collector's
+        previous tag."""
+        self.clear()
+        tag = f"{self._prefix}{superstep}"
         try:
-            self._sc.setLocalProperty(_GROUP_KEY, f"{self._prefix}{superstep}")
+            self._sc.addJobTag(tag)
+            self._tag = tag
         except Exception:
             pass
 
     def clear(self) -> None:
-        try:
-            self._sc.setLocalProperty(_GROUP_KEY, None)
-        except Exception:
-            pass
+        """Remove this collector's tag (and no other)."""
+        if self._tag is not None:
+            try:
+                self._sc.removeJobTag(self._tag)
+            except Exception:
+                pass
+            self._tag = None
+
+    def __enter__(self) -> "SuperstepMetricsCollector":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.clear()
 
     def _await_jobs_settled(self, job_ids, timeout_s: float = 2.0) -> None:
-        """Bounded wait for the listener bus to drain the group's events.
+        """Bounded wait for the listener bus to drain the jobs' events.
 
         A job is settled when the store shows it with zero active tasks
         and zero active stages. Gives up silently after ``timeout_s`` —
@@ -76,7 +89,7 @@ class SuperstepMetricsCollector:
             _t.sleep(0.01)
 
     def collect(self, superstep: int) -> dict:
-        """Aggregate stage metrics for the superstep's job group.
+        """Aggregate stage metrics for the superstep's tagged jobs.
 
         Returns {} on any failure. Times are milliseconds, sizes bytes:
         - shuffle_read_bytes / shuffle_write_bytes  (comm volume)
@@ -89,13 +102,13 @@ class SuperstepMetricsCollector:
         if self._store is None:
             return {}
         try:
-            job_ids = self._sc.statusTracker().getJobIdsForGroup(
+            job_ids = self._sc._jsc.sc().statusTracker().getJobIdsForTag(
                 f"{self._prefix}{superstep}"
             )
             # The AppStatusStore is fed by the async listener bus; the
             # barrier action's task-end events can still be in flight
             # when we get here, undercounting shuffle/CPU totals. Poll
-            # briefly (bounded) until every job in the group reports no
+            # briefly (bounded) until every tagged job reports no
             # active tasks/stages, then read once.
             self._await_jobs_settled(job_ids)
             seen: set[int] = set()

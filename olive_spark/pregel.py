@@ -56,10 +56,11 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
+from olive_spark.metrics import SuperstepMetricsCollector
 
 
 @contextmanager
@@ -90,6 +91,13 @@ def stable_partitioning(spark, disable_aqe: bool = False,
     skewed aggregations, and its stage-by-stage re-planning adds
     per-superstep scheduling latency. One-shot queries (triangles,
     ingest) keep AQE on.
+
+    The conf is session-global, so the section assumes one driver
+    thread drives the session: a concurrent query on another thread
+    would see the section's settings. However the section exits
+    (normally or by an exception), every key it set is restored to its
+    outer value; sections nest (e.g. ``Graph.degrees()`` inside a
+    loop).
     """
     sets = {
         (
@@ -176,8 +184,6 @@ class PregelProgram:
             materializes the state snapshot and counts the frontier),
             so convergence checking costs zero extra jobs.
             ``halt_pred(value, superstep) -> True`` stops the loop.
-    halt:   legacy driver-side convergence callback (one extra
-            aggregate action per superstep) — prefer halt_agg.
     """
 
     init: dict[str, Column]
@@ -187,7 +193,6 @@ class PregelProgram:
     cond: Column | None = None
     accum_default: Any = None
     full_frontier: bool = False
-    halt: Callable[[DataFrame, int], bool] | None = None
     halt_agg: Column | None = None
     halt_pred: Callable[[Any, int], bool] | None = None
     # Escape hatch for non-single-aggregate reduces (e.g. label
@@ -205,8 +210,8 @@ class _LazyMetricsList(list):
     of driver-side py4j round trips (~8 accessor calls per stage across
     the superstep's jobs), i.e. ~0.6s of a 10-superstep PageRank whose
     whole gated median is ~4s — pure critical-path overhead for fields
-    most callers (the bench, entry queries) never read. The job-group
-    tags are still applied per superstep during the loop (a free
+    most callers (the bench, entry queries) never read. The job tags
+    are still applied per superstep during the loop (a free
     driver-local property), so the deferred store read returns the
     exact same numbers; only WHEN they are read moves. ``superstep`` /
     ``ms`` / ``active`` stay eagerly recorded in the loop.
@@ -247,6 +252,8 @@ class _LazyMetricsList(list):
 
 @dataclass
 class PregelResult:
+    """Result of :func:`run_loop` (and so of :func:`pregel`)."""
+
     state: DataFrame  # (id, *state_cols)
     supersteps: int
     metrics: list[dict] = field(default_factory=list)
@@ -273,9 +280,9 @@ class PregelResult:
             self.free_failures += 1
 
 
-#: per-pregel-invocation counter feeding the job-group prefix (see
-#: _pregel_impl: id(graph) alone can be reused and cross-pollute metrics)
-_PREGEL_RUN_COUNTER = itertools.count()
+#: per-run_loop-invocation counter feeding the job-tag prefix: id(graph)
+#: alone can be reused and would fold one run's jobs into another's metrics
+_RUN_COUNTER = itertools.count()
 
 
 def _local_ckpt(df: DataFrame) -> DataFrame:
@@ -511,6 +518,131 @@ def _build_superstep(
     return joined.select(*exprs["post_join_cols"]).select(*exprs["final_cols"])
 
 
+def run_loop(
+    graph: Graph,
+    init: Callable[[Graph], DataFrame | None],
+    step: Callable[..., DataFrame],
+    barrier: list[Column],
+    stop: Callable[[Row, Row | None, int], bool],
+    max_steps: int,
+    checkpoint_store=None,
+    resume: bool = False,
+    checkpoint_every: int = 1,
+) -> PregelResult:
+    """The one superstep loop every iterative algorithm runs through
+    (the driver-side while of PageRank.cu:122-133; Oliver's
+    edgeMap/vertexMap/vertexReduce skeleton, oliver.h:56-183, once).
+
+    The caller supplies only its own parts:
+
+    - ``init(g) -> state``: the initial state over the loop graph ``g``
+      (or None when the first step builds its input itself);
+    - ``step(g, state, row, snap) -> new_state``: one superstep as a
+      lazy DataFrame. ``row`` is the previous barrier row; ``snap(df)``
+      returns a lazy snapshot of an intermediate the step reuses, freed
+      together with the step's state once the next step supersedes it;
+    - ``barrier``: aggregate Columns over the new state, evaluated in
+      the step's ONE action (a column aliased ``active`` is recorded as
+      the step's ``active`` count);
+    - ``stop(row, prev_row, n) -> bool``: convergence after step ``n``.
+
+    The core owns everything else: the scale-adaptive loop layout
+    (``graph.loop_layout()``); the AQE-off ``stable_partitioning`` scope
+    pinned to the layout's partition count, so every snapshot keeps its
+    hash(id, P) partitioning; the lazy ``localCheckpoint`` per step, or
+    with ``checkpoint_store`` a durable checkpoint every
+    ``checkpoint_every`` steps (``resume=True`` continues from the
+    store's latest committed step, and stops at once if ``stop`` holds
+    there); the single barrier action, which also materializes the
+    snapshots; freeing the superseded snapshots (failures counted in
+    ``free_failures``); and per-step job tags with one metrics record
+    per step ({superstep, ms, active} plus the stage totals of the
+    step's jobs, read lazily — see _LazyMetricsList — or inline on the
+    durable path, where ``CheckpointStore.log_superstep`` persists them).
+
+    The initial state is snapshotted and passed through the barrier
+    too (one job), so step 1 sees ``row`` of the init state. The
+    returned ``state`` is the last snapshot itself.
+    """
+    graph = graph.loop_layout()
+    spark = graph.edges.sparkSession
+    collector = SuperstepMetricsCollector(
+        spark, prefix=f"olive-loop-r{next(_RUN_COUNTER)}-"
+    )
+    with stable_partitioning(spark, disable_aqe=True,
+                             shuffle_partitions=graph.num_partitions), collector:
+        n, row = 0, None
+        last = checkpoint_store.latest_superstep() if resume and checkpoint_store else None
+        if last is not None:
+            state, _ = checkpoint_store.load(last)
+            n, row = last, state.agg(*barrier).first()
+            if stop(row, None, n):
+                return PregelResult(state=state, supersteps=n)
+        else:
+            state = init(graph)
+            if state is not None:
+                state = _local_ckpt(state)
+                row = state.agg(*barrier).first()
+
+        metrics: list[dict] = []
+        converged = False
+        free_failures = 0
+        live = [state]  # snapshots the current state is built from
+        fresh: list[DataFrame] = []
+
+        def snap(df: DataFrame) -> DataFrame:
+            df = _local_ckpt(df)
+            fresh.append(df)
+            return df
+
+        while n < max_steps:
+            t0 = time.monotonic()
+            n += 1
+            # every job this step submits (durable write + the barrier
+            # action) carries this step's tag
+            collector.tag(n)
+            new_state = step(graph, state, row, snap)
+            if checkpoint_store is not None and n % checkpoint_every == 0:
+                # the parquet write is the materializing action here
+                new_state, _ = checkpoint_store.checkpoint(n, new_state, None)
+                durable = True
+            else:
+                new_state, durable = _local_ckpt(new_state), False
+            fresh.append(new_state)
+            # ---- the ONE barrier action per step: materializes the
+            # snapshot(s) and folds the convergence aggregates in the
+            # same job (the reference's barrier + D2H vertexReduce fold,
+            # oliver.h:176-183)
+            prev, row = row, new_state.agg(*barrier).first()
+            # the superseded snapshots are no longer referenced
+            free_failures += sum(not _free_checkpoint(df) for df in live)
+            live, fresh, state = fresh, [], new_state
+            converged = stop(row, prev, n)
+            record = {
+                "superstep": n,
+                "ms": None,
+                "active": int(row["active"] or 0) if "active" in row.__fields__ else None,
+            }
+            if checkpoint_store is not None:
+                record.update(collector.collect(n))
+            record["ms"] = (time.monotonic() - t0) * 1000.0
+            metrics.append(record)
+            if durable:
+                checkpoint_store.log_superstep(record)
+            if converged:
+                break
+
+    if checkpoint_store is None:
+        metrics = _LazyMetricsList(metrics, collector)
+    return PregelResult(
+        state=state,
+        supersteps=n,
+        metrics=metrics,
+        converged=converged,
+        free_failures=free_failures,
+    )
+
+
 def pregel(
     graph: Graph,
     program: PregelProgram,
@@ -518,12 +650,10 @@ def pregel(
     checkpoint_store=None,
     checkpoint_every: int = 1,
     broadcast_threshold: int = 100_000,
-    collect_partition_metrics: bool = False,
-    collect_shuffle_metrics: bool = True,
     resume: bool = False,
     vertex_attrs: DataFrame | None = None,
 ) -> PregelResult:
-    """Run the superstep loop (driver-side while, PageRank.cu:122-133).
+    """Run ``program`` through :func:`run_loop`.
 
     checkpoint_store: optional olive_spark.checkpoint.CheckpointStore —
     when given, state+frontier are durably checkpointed every
@@ -531,60 +661,9 @@ def pregel(
     (north rule); otherwise lineage is truncated with localCheckpoint.
     resume=True picks up from the store's latest committed superstep —
     a resumed run is bit-identical to a straight run (tested).
-    collect_shuffle_metrics adds per-superstep shuffle read/write bytes
-    and comp/comm time splits (olive.h:131-150) to the metrics — a
-    driver-side AppStatusStore read per superstep, no executor cost.
     vertex_attrs: optional static per-vertex attribute DataFrame
     broadcast-joined into the init base (see _init_state).
     """
-    # scale-adaptive loop layout (guide §2.2): on a graph whose edge
-    # count is small relative to its configured parallelism, iterate on
-    # the memoized compact re-layout so per-superstep task scheduling
-    # does not dominate the data work; a no-op (returns `graph`) above
-    # the hysteresis threshold — see Graph.loop_layout.
-    graph = graph.loop_layout()
-    with stable_partitioning(graph.edges.sparkSession, disable_aqe=True,
-                             shuffle_partitions=graph.num_partitions):
-        return _pregel_impl(
-            graph,
-            program,
-            max_iterations,
-            checkpoint_store,
-            checkpoint_every,
-            broadcast_threshold,
-            collect_partition_metrics,
-            collect_shuffle_metrics,
-            resume,
-            vertex_attrs,
-        )
-
-
-def _pregel_impl(
-    graph: Graph,
-    program: PregelProgram,
-    max_iterations: int,
-    checkpoint_store,
-    checkpoint_every: int,
-    broadcast_threshold: int,
-    collect_partition_metrics: bool,
-    collect_shuffle_metrics: bool,
-    resume: bool,
-    vertex_attrs: DataFrame | None = None,
-) -> PregelResult:
-    spark = graph.edges.sparkSession
-    edges = graph.edges
-    shuffle_collector = None
-    if collect_shuffle_metrics:
-        from olive_spark.metrics import SuperstepMetricsCollector
-
-        # Per-invocation unique token: id(graph) alone is NOT unique —
-        # a second pregel() on the same Graph (or an id() recycled after
-        # GC) would reuse group ids, and getJobIdsForGroup would then
-        # fold prior runs' stage metrics into this run's supersteps.
-        run_token = next(_PREGEL_RUN_COUNTER)
-        shuffle_collector = SuperstepMetricsCollector(
-            spark, prefix=f"olive-superstep-r{run_token}-"
-        )
     state_cols = list(program.init.keys())
     with_outdeg = _uses_outdeg(program)
     frontier_driven = not program.full_frontier
@@ -598,166 +677,46 @@ def _pregel_impl(
     if frontier_driven and "_active" not in state_cols:
         state_cols.append("_active")
 
-    frontier_size = graph.vertex_count()
-    superstep = 0
-
-    resumed = False
-    if resume and checkpoint_store is not None:
-        last = checkpoint_store.latest_superstep()
-        if last is not None:
-            state, _ = checkpoint_store.load(last)
-            superstep = last
-            if frontier_driven:
-                if "_active" not in state.columns:
-                    raise ValueError("_active column missing from checkpoint")
-                frontier_size = state.filter(F.col("_active")).count()
-                if frontier_size == 0:
-                    # run had already converged at checkpoint time
-                    return PregelResult(
-                        state=state.select("id", *[c for c in state_cols if c != "_active"]),
-                        supersteps=superstep,
-                        metrics=[],
-                        converged=True,
-                    )
-            resumed = True
-
-    if not resumed:
-        state = _init_state(graph, program, vertex_attrs, with_outdeg=with_outdeg)
+    def init(g: Graph) -> DataFrame:
+        # No repartition: the init base (cached degrees or vertex table)
+        # is already hash(id, num_partitions)-partitioned, narrow
+        # projections and the broadcast attr join preserve that, and the
+        # snapshot records it (guide §2.4: remove shuffles the data's
+        # existing partitioning already provides).
+        state = _init_state(g, program, vertex_attrs, with_outdeg=with_outdeg)
         if frontier_driven and "_active" not in program.init:
             state = state.withColumn("_active", F.lit(True))
-        # lazy localCheckpoint: the first action on it materializes the
-        # snapshot — so the seed-frontier count below doubles as the
-        # materialization job (one job, not two). No repartition here:
-        # the init base (cached degrees or vertex table) is already
-        # hash(id, num_partitions)-partitioned, narrow projections and
-        # the broadcast attr join preserve that, and localCheckpoint
-        # records it — the explicit repartition was a redundant V-row
-        # exchange per pregel call (guide §2.4: remove shuffles the
-        # data's existing partitioning already provides).
-        state = _local_ckpt(state)
-        if frontier_driven:
-            n = state.agg(F.sum(F.col("_active").cast("long")).alias("n")).first()["n"]
-            frontier_size = int(n or 0)
-        else:
-            frontier_size = state.count()
-
-    metrics: list[dict] = []
-    converged = False
-    free_failures = 0
+        return state
 
     # loop-invariant Column trees, built once (r6: the per-superstep
     # py4j construction was ~85ms of a ~0.4s superstep)
-    superstep_exprs = _prepare_superstep_exprs(program, state_cols, with_outdeg)
-    barrier_aggs: list[Column] = []
+    exprs = _prepare_superstep_exprs(program, state_cols, with_outdeg)
+
+    def step(g: Graph, state: DataFrame, row: Row, _snap) -> DataFrame:
+        frontier_size = int(row["active"] or 0) if frontier_driven else 0
+        return _build_superstep(g.edges, state, program, state_cols, frontier_size,
+                                broadcast_threshold, with_outdeg, exprs)
+
+    barrier: list[Column] = []
     if frontier_driven:
-        barrier_aggs.append(F.sum(F.col("_active").cast("long")).alias("_n_active"))
+        barrier.append(F.sum(F.col("_active").cast("long")).alias("active"))
     if program.halt_agg is not None:
-        barrier_aggs.append(program.halt_agg.alias("_halt"))
-    if not barrier_aggs:
-        barrier_aggs.append(F.count(F.lit(1)).alias("_n"))
+        barrier.append(program.halt_agg.alias("_halt"))
+    if not barrier:
+        barrier.append(F.count(F.lit(1)).alias("_n"))
 
-    while superstep < max_iterations:
-        t0 = time.monotonic()
-        if shuffle_collector is not None:
-            # every job this superstep submits (durable checkpoint write
-            # + the barrier action) carries this superstep's group tag
-            shuffle_collector.tag(superstep + 1)
+    def stop(row: Row, _prev, n: int) -> bool:
+        if frontier_driven and not row["active"]:
+            return True
+        return (program.halt_agg is not None and program.halt_pred is not None
+                and program.halt_pred(row["_halt"], n))
 
-        # ---- edge phase + vertex phase (see _build_superstep) -----------
-        new_state = _build_superstep(
-            edges,
-            state,
-            program,
-            state_cols,
-            frontier_size,
-            broadcast_threshold,
-            with_outdeg,
-            superstep_exprs,
-        )
-
-        # ---- materialize + truncate lineage -----------------------------
-        durable = (
-            checkpoint_store is not None
-            and (superstep + 1) % checkpoint_every == 0
-        )
-        if durable:
-            # superstep+1 = the number of completed supersteps this state
-            # reflects (superstep increments just below). The parquet
-            # write is the materializing action on the durable path.
-            new_state, _ = checkpoint_store.checkpoint(superstep + 1, new_state, None)
-        else:
-            new_state = _local_ckpt(new_state)
-
-        # ---- the ONE barrier action per superstep ------------------------
-        # Materializes the (lazy) snapshot, counts the next frontier, and
-        # evaluates the convergence aggregate — all in a single job. This
-        # is the Spark analogue of the reference's superstep barrier +
-        # D2H vertexReduce fold (oliver.h:176-183), fused.
-        row = new_state.agg(*barrier_aggs).first()
-
-        # the new state is materialized; the previous snapshot is no
-        # longer referenced — drop it
-        if not _free_checkpoint(state):
-            free_failures += 1
-        state = new_state
-        superstep += 1
-
-        # ---- termination ------------------------------------------------
-        step_metrics = {"superstep": superstep, "ms": None, "active": None}
-        if frontier_driven:
-            frontier_size = int(row["_n_active"] or 0)
-            step_metrics["active"] = frontier_size
-            if frontier_size == 0:
-                converged = True
-        if (
-            not converged
-            and program.halt_agg is not None
-            and program.halt_pred is not None
-            and program.halt_pred(row["_halt"], superstep)
-        ):
-            converged = True
-        if not converged and program.halt is not None and program.halt(state, superstep):
-            converged = True
-
-        if collect_partition_metrics:
-            step_metrics["partitions"] = [
-                r.asDict()
-                for r in state.groupBy(
-                    F.spark_partition_id().alias("partition_id")
-                ).agg(F.count("*").alias("rows")).collect()
-            ]
-        if shuffle_collector is not None and checkpoint_store is not None:
-            # comp/comm split (olive.h:131-150): shuffle bytes + waits
-            # (comm) and executor run/cpu net of shuffle time (comp).
-            # Collected inline ONLY on the durable path (log_superstep
-            # persists per superstep below); otherwise deferred to the
-            # first .metrics read — see _LazyMetricsList (r6).
-            step_metrics.update(shuffle_collector.collect(superstep))
-        step_metrics["ms"] = (time.monotonic() - t0) * 1000.0
-        metrics.append(step_metrics)
-        if checkpoint_store is not None and durable:
-            checkpoint_store.log_superstep(step_metrics)
-
-        if converged:
-            break
-
-    if shuffle_collector is not None:
-        shuffle_collector.clear()
-        if checkpoint_store is None:
-            # deferred store reads: same job-group tags, same numbers,
-            # read on first .metrics access instead of on the loop's
-            # critical path (see _LazyMetricsList)
-            metrics = _LazyMetricsList(metrics, shuffle_collector)
-
-    result_state = state.select("id", *[c for c in state_cols if c != "_active"])
-    return PregelResult(
-        state=result_state,
-        supersteps=superstep,
-        metrics=metrics,
-        converged=converged,
-        free_failures=free_failures,
-        _raw_state=state,
-    )
+    res = run_loop(graph, init, step, barrier, stop, max_iterations,
+                   checkpoint_store=checkpoint_store, resume=resume,
+                   checkpoint_every=checkpoint_every)
+    res._raw_state = res.state
+    res.state = res.state.select("id", *[c for c in state_cols if c != "_active"])
+    return res
 
 
 def vertex_reduce(state: DataFrame, expr: Column) -> Any:

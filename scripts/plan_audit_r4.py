@@ -1,15 +1,13 @@
-"""Round-4 plan audit: round-3 invariants still hold, plus the new
-round-4 plan guarantees.
+"""Round-4 plan audit: the round-4 plan guarantees. (The round-3
+invariants — no per-round Exchange above a cached edge scan in the
+HITS and k-core rounds — are pinned by tests/test_loop_plans.py.)
 
 Checks:
-1. All round-3 invariants (delegates to plan_audit_r3: HITS half-rounds
-   and k-core delta-peel probe cached layouts with no per-round
-   Exchange above the cached edge scan).
-2. Personalized PageRank with a large seed set (> PPR_SEED_LITERAL_MAX)
+1. Personalized PageRank with a large seed set (> PPR_SEED_LITERAL_MAX)
    builds its init base via a BROADCAST join of the seed DataFrame —
    no In-list literal of seed ids anywhere in the optimized plan
    (round-3 finding #2).
-3. The CSR gather (cogroup-applyInPandas) plan re-exchanges only the
+2. The CSR gather (cogroup-applyInPandas) plan re-exchanges only the
    narrow per-partition PARTIALS and the (id, value) state — the
    cached E-sized block table is scanned in place.
 
@@ -92,11 +90,6 @@ def audit_csr_gather_plan(spark) -> None:
 
 
 def main():
-    # reuse the r3 session + invariants first
-    import plan_audit_r3
-
-    plan_audit_r3.main()
-
     from olive_spark.session import get_spark
 
     spark = get_spark(app_name="plan_audit_r4", master="local[4]",

@@ -58,25 +58,6 @@ def test_superstep_shuffle_metrics(spark, tmp_path):
     assert all(m["shuffle_read_bytes"] > 0 for m in logged)
 
 
-def test_shuffle_metrics_opt_out(spark):
-    """collect_shuffle_metrics=False keeps the metrics lean (bench mode)."""
-    from olive_spark.pregel import PregelProgram, pregel
-    from pyspark.sql import functions as F
-
-    n, e = grid_graph()
-    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
-    prog = PregelProgram(
-        init={"x": F.lit(0.0)},
-        gather=F.lit(1.0),
-        agg=F.sum,
-        update={"x": F.col("accum")},
-        accum_default=0.0,
-        full_frontier=True,
-    )
-    res = pregel(g, prog, max_iterations=2, collect_shuffle_metrics=False)
-    assert all("shuffle_read_bytes" not in m for m in res.metrics)
-
-
 def test_resume_equals_straight_run(spark, tmp_path):
     """Kill after superstep k, resume from checkpoint -> identical final
     state (north-rule resumability; SURVEY.md §5 property test)."""

@@ -21,6 +21,7 @@ plans are the multi-partition shapes, not the 1-partition shortcut.
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pytest
@@ -85,19 +86,24 @@ def _shape(plans: list[str], inside_cache: bool = False) -> dict:
 
 def _snapshot_plans(spark, fn):
     """Run ``fn``; return its result and the plans of the lazy snapshots
-    (``localCheckpoint``) it planned, in order."""
-    sc = spark.sparkContext
+    (``localCheckpoint``) it planned, in order. Executions are told
+    apart by id: the store keeps only the most recent ones, so its list
+    length stops growing in a long session."""
     store = spark._jsparkSession.sharedState().statusStore()
-    n0 = store.executionsList().size()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest_first():
+        ex = store.executionsList()
+        return (ex.apply(i) for i in range(ex.size() - 1, -1, -1))
+
+    bus.waitUntilEmpty()
+    last = next((e.executionId() for e in newest_first()), -1)
     out = fn()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    ex = store.executionsList()
-    plans = [
-        ex.apply(i).physicalPlanDescription()
-        for i in range(n0, ex.size())
-        if ex.apply(i).description().startswith("localCheckpoint")
-    ]
-    return out, plans
+    bus.waitUntilEmpty()
+    new = itertools.takewhile(lambda e: e.executionId() > last, newest_first())
+    plans = [e.physicalPlanDescription() for e in new
+             if e.description().startswith("localCheckpoint")]
+    return out, plans[::-1]
 
 
 def _jobs(spark, fn) -> int:
