@@ -63,7 +63,7 @@ def hits(graph: Graph, iterations: int = 3) -> DataFrame:
     # run_loop's own layout (loop_layout is memoized and idempotent):
     # the final coverage joins below probe its vertex table
     graph = graph.loop_layout()
-    auth: list[DataFrame] = []  # the last round's normalized authority
+    auth = None  # the last round's normalized authority
 
     # Round-6 optimization (guide §1.2/§2.3): the iteration runs on the
     # RESTRICTED score tables — auth over vertices with in-edges, hub
@@ -81,6 +81,7 @@ def hits(graph: Graph, iterations: int = 3) -> DataFrame:
     # reversed: by its src = original dst) — zero per-round exchange of
     # the E-sized side, no serial driver broadcast build per half-round.
     def step(g: Graph, h_raw: DataFrame | None, _row, snap) -> DataFrame:
+        nonlocal auth
         # round 1 starts from hub = 1.0 over the cached vertex table
         # (already hash(id, P); the narrow projection preserves it)
         hub = (g.vertices.select("id", F.lit(1.0).alias("hub")) if h_raw is None
@@ -97,13 +98,13 @@ def hits(graph: Graph, iterations: int = 3) -> DataFrame:
             .groupBy("id")
             .agg(F.sum("g").alias("a_raw"))
         )
-        auth[:] = [_normalize(a_msg, "a_raw", "auth")]
+        auth = _normalize(a_msg, "a_raw", "auth")
         # ---- hub half-round: messages along REVERSE edges --------------
         # The cached reversed layout is partitioned by r.src (= original
         # dst), so this join probes the big side in place — only the
         # narrow auth state moves, same as the forward half.
         return (
-            auth[0].hint("shuffle_hash").alias("a")
+            auth.hint("shuffle_hash").alias("a")
             .join(g.reversed_edges().alias("r"), F.col("a.id") == F.col("r.src"))
             .select(F.col("r.dst").alias("id"), F.col("a.auth").alias("g"))
             .groupBy("id")
@@ -117,7 +118,7 @@ def hits(graph: Graph, iterations: int = 3) -> DataFrame:
     # full vertex coverage (0.0 for vertices with no in-/out-edges),
     # restored once instead of per half-round
     return (
-        graph.vertices.join(auth[0].hint("shuffle_hash"), "id", "left")
+        graph.vertices.join(auth.hint("shuffle_hash"), "id", "left")
         .join(hub.hint("shuffle_hash"), "id", "left")
         .select(
             "id",

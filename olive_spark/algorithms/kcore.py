@@ -78,7 +78,8 @@ def kcore(graph: Graph, k: int, max_rounds: int = 100) -> KCoreResult:
         # hinted shuffled-hash probe of the V-row deg0 side preserves
         # the cached vertex table's hash(id, P) through the left join.
         # The init barrier scans the closure, so round 1 plans against
-        # a materialized cache (and its final partitioning).
+        # a materialized cache (and its final partitioning); the zero
+        # peel columns let the init state pass the rounds' barrier.
         deg0 = g.edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         return g.vertices.join(
             deg0.hint("shuffle_hash"), g.vertices["id"] == deg0["src"], "left"

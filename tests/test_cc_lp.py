@@ -104,5 +104,12 @@ def test_cc_stars_long_chain(spark):
 
     n, e = chain_graph(1000)
     g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
-    out = connected_components_stars(g)
+    rounds: list = []
+    out = connected_components_stars(g, round_metrics=rounds)
     assert out.filter("component != 0").count() == 0  # single component, min id 0
+    # one {round, edges, ms} record per round; the last round repeats
+    # the previous edge set (the star rooted at 0: n-1 edges)
+    assert [set(r) for r in rounds] == [{"round", "edges", "ms"}] * len(rounds)
+    assert [r["round"] for r in rounds] == list(range(1, len(rounds) + 1))
+    assert 2 <= len(rounds) <= 20
+    assert rounds[-1]["edges"] == rounds[-2]["edges"] == n - 1
