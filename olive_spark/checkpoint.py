@@ -22,22 +22,25 @@ path):
     <root>/<run_id>/superstep=<k>/_SUCCESS_OLIVE  commit marker (atomic:
         written only after the table lands -> a crashed write is
         invisible to resume)
-    <root>/<run_id>/lineage/                 parquet, appended per superstep:
+    <root>/<run_id>/lineage/<k:06d>.json     JSON lines, one file per superstep:
         (run_id, superstep, partition_id, rows, bytes, ms) — one row per
         WRITTEN partition file: rows from the file's parquet footer,
         bytes from its actual length, both read on the driver from the
         one listing of the snapshot directory (r1 recomputed partition
         ids on the re-read scan, which described the read layout, not
-        the write). ``ms`` times the state write alone.
+        the write). ``ms`` times the state write alone. The file is
+        written before the commit marker and overwritten when a step is
+        re-run (a resumed run repeats any step whose marker never
+        landed), so each step's rows are stored once.
     <root>/<run_id>/supersteps/<k>.json      driver-side metrics, one
         object per superstep (append-free: object stores can't append)
 
-A durable superstep submits two jobs besides its barrier
-aggregate: the snapshot write (the superstep's materializing action)
-and the one-task lineage append. The snapshot is read back with its
-known schema (no inference job), and the lineage rows are literals in
-a JVM-side relation, so no job re-scans the snapshot and no Python
-worker runs.
+A durable superstep submits ONE job: the snapshot write, which is the
+superstep's materializing action. The loop folds its barrier
+aggregates into that write as observed metrics (pregel.run_loop); the
+snapshot is read back with its known schema (no inference job); and the
+lineage rows are written by the driver, so no job re-scans the snapshot
+and no Python worker runs.
 
 Checkpoint read-back also truncates lineage growth: the returned
 DataFrames are fresh parquet scans with single-node plans, replacing an
@@ -51,7 +54,6 @@ import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MARKER = "_SUCCESS_OLIVE"
@@ -145,10 +147,11 @@ class CheckpointStore:
     def _write_lineage(self, superstep: int, ms: float) -> None:
         """One lineage row per WRITTEN partition file: rows from the
         file's parquet footer, bytes from its length on the target
-        filesystem. The append is the only job this submits."""
+        filesystem. Written by the driver as the step's own JSON-lines
+        file (overwrite, so a re-run step replaces its rows); no job."""
         state_dir = f"{self._step_dir(superstep)}/state"
         parquet = self._jvm.org.apache.parquet.hadoop
-        structs = []
+        lines = []
         statuses = self._fs(state_dir).listStatus(self._hpath(state_dir))
         for st in sorted(statuses, key=lambda st: st.getPath().getName()):
             m = re.match(r"part-(\d+)", st.getPath().getName())
@@ -161,23 +164,9 @@ class CheckpointStore:
                 rows = reader.getRecordCount()
             finally:
                 reader.close()
-            structs.append(
-                F.struct(
-                    F.lit(self.run_id),
-                    F.lit(superstep),
-                    F.lit(int(m.group(1))),
-                    F.lit(rows),
-                    F.lit(st.getLen()),
-                    F.lit(ms),
-                )
-            )
-        # the cast gives every field (and an empty array) _LINEAGE_SCHEMA's
-        # type and nullability, so the parquet footer matches as well
-        lineage_rows = T.ArrayType(_LINEAGE_SCHEMA, containsNull=False)
-        per_part = self.spark.range(1, numPartitions=1).select(
-            F.inline(F.array(*structs).cast(lineage_rows))
-        )
-        per_part.coalesce(1).write.mode("append").parquet(f"{self.base}/lineage")
+            record = (self.run_id, superstep, int(m.group(1)), rows, st.getLen(), ms)
+            lines.append(json.dumps(dict(zip(_LINEAGE_SCHEMA.names, record))) + "\n")
+        self._write_text(f"{self.base}/lineage/{superstep:06d}.json", "".join(lines))
 
     def log_superstep(self, metrics: dict) -> None:
         """Record driver-side superstep metrics (active count, wall ms)
@@ -227,4 +216,4 @@ class CheckpointStore:
         return out
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.base}/lineage")
+        return self.spark.read.schema(_LINEAGE_SCHEMA).json(f"{self.base}/lineage")

@@ -67,11 +67,15 @@ class SuperstepMetricsCollector:
         self.clear()
 
     def _await_jobs_settled(self, job_ids, timeout_s: float = 2.0) -> None:
-        """Bounded wait for the listener bus to drain the jobs' events.
+        """Bounded wait for the listener bus to deliver the jobs' ends.
 
-        A job is settled when the store shows it with zero active tasks
-        and zero active stages. Gives up silently after ``timeout_s`` —
-        metrics degrade to a slight undercount, never a loop failure.
+        A job is settled once the store no longer shows it ``RUNNING``:
+        the scheduler posts a job's end after all of its task and stage
+        events, so its stage totals are final by then. (Zero active
+        tasks and stages is not enough: that also holds in the gap
+        between two of the job's stages.) Gives up silently after
+        ``timeout_s`` — metrics degrade to a slight undercount, never a
+        loop failure.
         """
         import time as _t
 
@@ -79,8 +83,7 @@ class SuperstepMetricsCollector:
         while _t.monotonic() < deadline:
             try:
                 if all(
-                    self._store.job(jid).numActiveTasks() == 0
-                    and self._store.job(jid).numActiveStages() == 0
+                    self._store.job(jid).status().toString() != "RUNNING"
                     for jid in job_ids
                 ):
                     return
@@ -106,10 +109,10 @@ class SuperstepMetricsCollector:
                 f"{self._prefix}{superstep}"
             )
             # The AppStatusStore is fed by the async listener bus; the
-            # barrier action's task-end events can still be in flight
+            # step's last task-end events can still be in flight
             # when we get here, undercounting shuffle/CPU totals. Poll
-            # briefly (bounded) until every tagged job reports no
-            # active tasks/stages, then read once.
+            # briefly (bounded) until no tagged job is still RUNNING,
+            # then read once.
             self._await_jobs_settled(job_ids)
             seen: set[int] = set()
             sr = sw = run_ms = cpu_ns = fetch_ms = wnano = tasks = 0

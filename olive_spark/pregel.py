@@ -56,7 +56,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
@@ -554,7 +554,12 @@ def run_loop(
     ``checkpoint_every`` steps (``resume=True`` continues from the
     store's latest committed step, and stops at once if ``stop`` holds
     there); the single barrier action, which also materializes the
-    snapshots; freeing the superseded snapshots (failures counted in
+    snapshots; on a durable step that action is the snapshot write
+    itself, with the barrier folded in as observed metrics
+    (``DataFrame.observe``, so no distinct aggregates) and its row read
+    once the write has returned: one job per durable step, no re-scan
+    of the written snapshot (the resume load still runs an aggregate
+    over it); freeing the superseded snapshots (failures counted in
     ``free_failures``); and per-step job tags with one metrics record
     per step ({superstep, ms, active} plus the stage totals of the
     step's jobs, read lazily — see _LazyMetricsList — or inline on the
@@ -598,22 +603,25 @@ def run_loop(
         while n < max_steps:
             t0 = time.monotonic()
             n += 1
-            # every job this step submits (durable write + the barrier
-            # action) carries this step's tag
+            # every job this step submits carries this step's tag
             collector.tag(n)
             new_state = step(graph, state, row, snap)
-            if checkpoint_store is not None and n % checkpoint_every == 0:
-                # the parquet write is the materializing action here
-                new_state, _ = checkpoint_store.checkpoint(n, new_state, None)
-                durable = True
-            else:
-                new_state, durable = _local_ckpt(new_state), False
-            fresh.append(new_state)
-            # ---- the ONE barrier action per step: materializes the
-            # snapshot(s) and folds the convergence aggregates in the
-            # same job (the reference's barrier + D2H vertexReduce fold,
+            # ---- the ONE action per step: materializes the snapshot(s)
+            # and folds the barrier aggregates in the same job (the
+            # reference's barrier + D2H vertexReduce fold,
             # oliver.h:176-183)
-            prev, row = row, new_state.agg(*barrier).first()
+            durable = checkpoint_store is not None and n % checkpoint_every == 0
+            if durable:
+                # the parquet write is the action; the barrier rides in
+                # it as observed metrics, complete once the write returns
+                obs = Observation()
+                new_state, _ = checkpoint_store.checkpoint(
+                    n, new_state.observe(obs, *barrier), None)
+                prev, row = row, Row(**obs.get)
+            else:
+                new_state = _local_ckpt(new_state)
+                prev, row = row, new_state.agg(*barrier).first()
+            fresh.append(new_state)
             # the superseded snapshots are no longer referenced
             free_failures += sum(not _free_checkpoint(df) for df in live)
             live, fresh, state = fresh, [], new_state

@@ -2,17 +2,21 @@
 
 from __future__ import annotations
 
+import importlib
 import os
 import re
 
 import numpy as np
+from pyspark.sql import Observation, Row
 from pyspark.sql import functions as F
 
 from olive_spark.algorithms.pagerank import pagerank
 from olive_spark.algorithms.bfs import bfs
+from olive_spark.algorithms.cc import connected_components
 from olive_spark.checkpoint import _LINEAGE_SCHEMA, CheckpointStore
 from olive_spark.fixtures import grid_graph, chain_graph
 from olive_spark.graph import Graph
+from olive_spark.metrics import SuperstepMetricsCollector
 
 
 def ranks(res):
@@ -37,11 +41,14 @@ def test_checkpoint_and_lineage(spark, tmp_path):
     assert all(v == n for v in per_step.values())
 
 
-def test_superstep_shuffle_metrics(spark, tmp_path):
+def test_superstep_shuffle_metrics(spark, tmp_path, monkeypatch):
     """comp/comm split per superstep (olive.h:131-150 analogue): the
     multi-partition run must record nonzero shuffle read+write bytes
     and executor time for every superstep, both in PregelResult.metrics
-    and in the CheckpointStore supersteps log."""
+    and in the CheckpointStore supersteps log. The compact loop layout
+    is held off, so the run really is multi-partition (the 15-vertex
+    grid would otherwise loop at P=1)."""
+    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
     n, e = grid_graph()
     g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
     store = CheckpointStore(spark, str(tmp_path / "ckpt_sh"), run_id="rsh")
@@ -221,3 +228,92 @@ def test_durable_superstep_has_no_python_round_trip(spark, tmp_path, monkeypatch
     per_step = {r["superstep"]: r["total"] for r in
                 store.lineage().groupBy("superstep").agg(F.sum("rows").alias("total")).collect()}
     assert per_step == {1: n, 2: n}
+
+
+def test_repeated_superstep_lineage_is_idempotent(spark, tmp_path):
+    """Re-running a step (a resume after a crash between the lineage
+    write and the commit marker) replaces that step's lineage rows
+    instead of adding a second copy."""
+    state = spark.range(0, 40, 1, 4).withColumn("x", F.col("id") * 0.5)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_rerun"), run_id="r10")
+    store.checkpoint(3, state)
+    store.checkpoint(3, state)
+    parts = [r["partition_id"] for r in store.lineage().filter("superstep = 3").collect()]
+    assert parts and len(parts) == len(set(parts))
+
+
+def test_observed_barrier_of_empty_snapshot(spark, tmp_path):
+    """The barrier observed in a zero-row snapshot write is a row with
+    count 0, as the aggregate over an empty state would be."""
+    state = spark.range(0, 0, 1, 4).withColumn("x", F.col("id") * 0.5)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_obs"), run_id="r11")
+    obs = Observation()
+    store.checkpoint(1, state.observe(obs, F.count(F.lit(1)).alias("n")))
+    assert Row(**obs.get) == state.agg(F.count(F.lit(1)).alias("n")).first() == Row(n=0)
+
+
+def _active_per_step(res):
+    return [m["active"] for m in res.metrics]
+
+
+def test_durable_and_local_barriers_agree(spark, tmp_path):
+    """The barrier observed in the durable write gives the same
+    per-step frontier counts as the local path's barrier aggregate."""
+    n, e = chain_graph(12)
+    chain = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    n, e = grid_graph()
+    grid = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    runs = {
+        "bfs": lambda store: bfs(chain, source=0, checkpoint_store=store),
+        "cc": lambda store: connected_components(grid, checkpoint_store=store),
+    }
+    for name, run in runs.items():
+        local = run(None)
+        store = CheckpointStore(spark, str(tmp_path / f"ckpt_{name}"), run_id=name)
+        durable = run(store)
+        assert _active_per_step(durable) == _active_per_step(local), name
+        assert durable.supersteps == local.supersteps and durable.converged, name
+        assert [m["active"] for m in store.superstep_metrics()] == _active_per_step(local)
+
+
+def test_durable_convergence_stops_at_same_step(spark, tmp_path):
+    """An epsilon-halted PageRank stops at the same superstep whether
+    its halting sum is observed in the durable write or aggregated."""
+    n, e = grid_graph()
+    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    local = pagerank(g, epsilon=1e-7, max_iterations=100)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_eps"), run_id="eps")
+    durable = pagerank(g, epsilon=1e-7, max_iterations=100, checkpoint_store=store)
+    assert local.converged and durable.converged
+    assert durable.supersteps == local.supersteps
+    assert store.latest_superstep() == local.supersteps
+
+
+def test_logged_metrics_are_settled(spark, tmp_path, monkeypatch):
+    """Each persisted superstep record holds its jobs' final stage
+    totals: a re-read once the listener bus has drained gives the same
+    numbers."""
+    collectors = []
+
+    class Recording(SuperstepMetricsCollector):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            collectors.append(self)
+
+    # the module, not the ``olive_spark.pregel`` function the package exports
+    loop_core = importlib.import_module("olive_spark.pregel")
+    monkeypatch.setattr(loop_core, "SuperstepMetricsCollector", Recording)
+    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
+    n, e = grid_graph()
+    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt_settled"), run_id="settled")
+    pagerank(g, epsilon=None, max_iterations=3, checkpoint_store=store).free()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+    (collector,) = collectors
+    logged = store.superstep_metrics()
+    assert [m["superstep"] for m in logged] == [1, 2, 3]
+    for m in logged:
+        again = collector.collect(m["superstep"])
+        assert again["tasks"] > 0
+        assert {k: m[k] for k in again} == again

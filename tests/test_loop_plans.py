@@ -193,7 +193,11 @@ def test_ingest_edge_table_plan(spark):
 
 def test_jobs_per_step(spark, graphs, tmp_path):
     g, chain = graphs["grid"], graphs["chain"]
-    pagerank_fixed(g, 1).free()  # warm the layouts every call below reuses
+    # warm the layouts every call below reuses, so each difference counts
+    # steps only (HITS builds the reversed layout on its first call)
+    pagerank_fixed(g, 1).free()
+    hits(g, 1)
+    kcore(chain, 3, max_rounds=1)
 
     def durable(k):
         store = CheckpointStore(spark, f"file://{tmp_path}/ckpt{k}", run_id="jobs")
@@ -207,6 +211,8 @@ def test_jobs_per_step(spark, graphs, tmp_path):
         "kcore": _jobs(spark, lambda: kcore(chain, 3, max_rounds=3))
         - _jobs(spark, lambda: kcore(chain, 3, max_rounds=2)),
     }
-    # a HITS round is one barrier job plus one broadcast job for each of
-    # its two L2-norm rows (the 1-row norms are broadcast-joined back)
-    assert per_step == {"local": 1, "durable": 3, "hits": 3, "kcore": 1}
+    # a durable step's one job is its snapshot write (the barrier is
+    # observed in it); a HITS round is one barrier job plus one broadcast
+    # job for each of its two L2-norm rows (the 1-row norms are
+    # broadcast-joined back)
+    assert per_step == {"local": 1, "durable": 1, "hits": 3, "kcore": 1}
