@@ -398,48 +398,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_pagerank(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "edge_build": _q_edges,
-        "edge_build_tri": _q_tri_edges,
-        "out_degrees": _q_degrees,
-        "degree_histogram": _q_degree_hist,
-        "pagerank_k5": _q_pagerank,
-        "cc_k8": _q_cc,
-        "bfs_k6": _q_bfs,
-        "labelprop_k3": _q_lp,
-        "triangle_total": _q_tri_total,
-        "triangle_per_vertex": _q_tri_per_vertex,
-        "doc_exact_dedup": _q_exact_dedup,
-        "doc_token_stats": _q_token_stats,
-        "doc_lang_markers": _q_lang_markers,
-        "emb_cosine_scores": _q_cosine,
-        "doc_minhash_lsh": _q_minhash_lsh,
-        "pages_ingest_degrees": _q_pages_ingest,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "edge_build": TESTDATA_EDGES_SQL,
-        "edge_build_tri": TESTDATA_TRI_EDGES_SQL,
-        "out_degrees": _DEGREES_SQL,
-        "degree_histogram": _DEGREE_HIST_SQL,
-        "pagerank_k5": _pagerank_sql(PR_K),
-        "cc_k8": _cc_sql(CC_K),
-        "bfs_k6": _bfs_sql(BFS_K, BFS_SOURCE),
-        "labelprop_k3": _lp_sql(LP_K),
-        "triangle_total": _TRI_TOTAL_SQL,
-        "triangle_per_vertex": _TRI_PER_VERTEX_SQL,
-        "doc_exact_dedup": _EXACT_DEDUP_SQL,
-        "doc_token_stats": _TOKEN_STATS_SQL,
-        "doc_lang_markers": _LANG_MARKER_SQL,
-        "emb_cosine_scores": _COSINE_SQL,
-        # doc_minhash_lsh / doc_simhash / pages_ingest_degrees oracles are
-        # added in the final append block below (r2: every query oracled).
-    }
-
-
 # --- appended queries: kNN top-k with SQL oracle; simhash rows-only ---------
 
 _KNN_SQL = """
@@ -491,25 +449,6 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_testdata_views(spark, sf_dir)
     return simhash_signatures(spark.table("documents"))
 
-
-_BASE_QUERIES = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES())
-    q["emb_knn_top5"] = _q_knn
-    q["doc_simhash"] = _q_simhash
-    return q
-
-
-_BASE_ORACLES = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES())
-    o["emb_knn_top5"] = _KNN_SQL
-    # doc_simhash: intentionally no oracle (rows-only)
-    return o
 
 
 # --- appended: weighted PageRank + weighted SSSP with SQL oracles -----------
@@ -599,25 +538,6 @@ def _q_wsssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BASE_QUERIES2 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES2())
-    q["weighted_pagerank_k5"] = _q_wpagerank
-    q["weighted_sssp_k6"] = _q_wsssp
-    return q
-
-
-_BASE_ORACLES2 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES2())
-    o["weighted_pagerank_k5"] = _wpagerank_sql(WPR_K)
-    o["weighted_sssp_k6"] = _wsssp_sql(WSSSP_K, 0)
-    return o
-
 
 # --- appended: exact n-gram Jaccard near-dup pairs with SQL oracle ----------
 
@@ -664,23 +584,6 @@ def _q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("jaccard") * 1e6).cast("long").alias("jaccard_e6"),
     )
 
-
-_BASE_QUERIES3 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES3())
-    q["doc_ngram_jaccard"] = _q_jaccard
-    return q
-
-
-_BASE_ORACLES3 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES3())
-    o["doc_ngram_jaccard"] = _JACCARD_SQL
-    return o
 
 
 # --- appended (r2): oracles for every remaining query + IVF kNN -------------
@@ -760,26 +663,6 @@ def _q_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BASE_QUERIES4 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES4())
-    q["emb_ivf_top5"] = _q_ivf
-    return q
-
-
-_BASE_ORACLES4 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES4())
-    o["doc_simhash"] = _simhash_sql()
-    o["doc_minhash_lsh"] = _JACCARD_SQL
-    o["pages_ingest_degrees"] = _PAGES_DEGREES_SQL
-    o["emb_ivf_top5"] = _KNN_SQL
-    return o
-
 
 # --- appended (r2): embedding near-dup pairs + content fingerprints ---------
 
@@ -833,25 +716,6 @@ def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "md5", "norm_md5"
     )
 
-
-_BASE_QUERIES5 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES5())
-    q["emb_near_dup_pairs"] = _q_emb_neardup
-    q["doc_fingerprints"] = _q_fingerprints
-    return q
-
-
-_BASE_ORACLES5 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES5())
-    o["emb_near_dup_pairs"] = _EMB_NEARDUP_SQL
-    o["doc_fingerprints"] = _FINGERPRINT_SQL
-    return o
 
 
 # --- appended (r2): HITS, personalized PageRank, host-graph rollup ----------
@@ -982,27 +846,6 @@ def _q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_graph_edges(pages)
 
 
-_BASE_QUERIES6 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES6())
-    q["hits_k3"] = _q_hits
-    q["ppr_k5"] = _q_ppr
-    q["pages_host_graph"] = _q_host_graph
-    return q
-
-
-_BASE_ORACLES6 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES6())
-    o["hits_k3"] = _hits_sql(HITS_K)
-    o["ppr_k5"] = _ppr_sql(PPR_K, PPR_SOURCES)
-    o["pages_host_graph"] = _HOST_GRAPH_SQL
-    return o
-
 
 # --- appended (r2): k-core peeling over the chain page graph ----------------
 
@@ -1034,23 +877,6 @@ def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = kcore(g, k=KCORE_K, max_rounds=KCORE_R)
     return res.state.select("id", F.col("in_core").cast("int").alias("in_core"))
 
-
-_BASE_QUERIES7 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES7())
-    q["kcore3_chain_r5"] = _q_kcore
-    return q
-
-
-_BASE_ORACLES7 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES7())
-    o["kcore3_chain_r5"] = _KCORE_SQL
-    return o
 
 
 # --- appended (r2): near-dup clustering + corpus n-gram counts --------------
@@ -1123,88 +949,6 @@ def _q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_counts(spark.table("documents"), n=2, min_count=5)
 
 
-_BASE_QUERIES8 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES8())
-    q["doc_dedup_clusters"] = _q_dedup_clusters
-    q["doc_ngram_counts"] = _q_ngram_counts
-    return q
-
-
-_BASE_ORACLES8 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES8())
-    o["doc_dedup_clusters"] = _dedup_clusters_sql(DEDUP_CC_K)
-    o["doc_ngram_counts"] = _NGRAM_COUNTS_SQL
-    return o
-
-
-# ---------------------------------------------------------------------------
-# Round 4: the CSR-block fast path under the same oracles as the
-# DataFrame path. cc/bfs/sssp over per-partition CSR adjacency
-# (csr.py; reference CSR layout csrGraph.h:55-84) are frontier-driven;
-# frontier pruning is a no-op w.r.t. the synchronous k-round semantics
-# (a vertex unchanged since its last gather re-contributes the same
-# candidate, which LEAST/min discards), so the SAME unrolled SQL
-# oracles apply — the strongest equivalence statement available: both
-# execution paths hash-match one DuckDB result.
-# ---------------------------------------------------------------------------
-
-
-def _q_bfs_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olive_spark.csr import bfs_csr
-
-    g = testdata_tri_graph(spark, sf_dir)
-    out = bfs_csr(g, source=BFS_SOURCE, max_iterations=BFS_K)
-    return out.select("id", F.col("level").cast("long").alias("level"))
-
-
-def _q_cc_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olive_spark.csr import cc_csr
-
-    g = testdata_tri_graph(spark, sf_dir)
-    out = cc_csr(g, max_iterations=CC_K)
-    return out.select("id", F.col("component").cast("long").alias("component"))
-
-
-def _q_wsssp_csr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olive_spark.csr import sssp_csr
-
-    g = testdata_weighted_graph(spark, sf_dir)
-    out = sssp_csr(g, source=0, max_iterations=WSSSP_K)
-    return out.select(
-        "id",
-        F.when(F.col("distance") == float("inf"), F.lit(-1).cast("long"))
-        .otherwise(F.round(F.col("distance") * 1e6).cast("long"))
-        .alias("dist_e6"),
-    )
-
-
-_BASE_QUERIES9 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES9())
-    q["bfs_csr_k6"] = _q_bfs_csr
-    q["cc_csr_k8"] = _q_cc_csr
-    q["wsssp_csr_k6"] = _q_wsssp_csr
-    return q
-
-
-_BASE_ORACLES9 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES9())
-    o["bfs_csr_k6"] = _bfs_sql(BFS_K, BFS_SOURCE)
-    o["cc_csr_k8"] = _cc_sql(CC_K)
-    o["wsssp_csr_k6"] = _wsssp_sql(WSSSP_K, 0)
-    return o
-
 
 # ---------------------------------------------------------------------------
 # Round 4: per-vertex local clustering coefficient — the classic
@@ -1249,23 +993,6 @@ def _q_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BASE_QUERIES10 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES10())
-    q["clustering_coeff"] = _q_clustering
-    return q
-
-
-_BASE_ORACLES10 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES10())
-    o["clustering_coeff"] = _CLUSTERING_SQL
-    return o
-
 
 # ---------------------------------------------------------------------------
 # Round 4: per-target anchor-text profile over the ingest path — the
@@ -1309,30 +1036,12 @@ def _q_anchor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BASE_QUERIES11 = queries
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES11())
-    q["pages_anchor_stats"] = _q_anchor_stats
-    return q
-
-
-_BASE_ORACLES11 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES11())
-    o["pages_anchor_stats"] = _ANCHOR_STATS_SQL
-    return o
-
 
 # --- round 5: BLAS brute-force kNN (Arrow matmul path) ----------------------
 # Same contract as emb_knn_top5 (so it shares _KNN_SQL verbatim): the
 # mapInPandas/BLAS baseline must be row-identical to the SQL cross-join
 # baseline — the strongest cross-path equivalence statement available
-# for the similarity family (mirrors what bfs_csr/cc_csr did for the
-# graph family in round 4).
+# for the similarity family.
 
 
 def _q_knn_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1350,19 +1059,83 @@ def _q_knn_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BASE_QUERIES12 = queries
+# ---------------------------------------------------------------------------
+# The contract registry: query name -> Spark query, and query name ->
+# DuckDB oracle SQL.
+# ---------------------------------------------------------------------------
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:  # noqa: F811
-    q = dict(_BASE_QUERIES12())
-    q["emb_knn_blas_top5"] = _q_knn_blas
-    return q
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {
+        "edge_build": _q_edges,
+        "edge_build_tri": _q_tri_edges,
+        "out_degrees": _q_degrees,
+        "degree_histogram": _q_degree_hist,
+        "pagerank_k5": _q_pagerank,
+        "cc_k8": _q_cc,
+        "bfs_k6": _q_bfs,
+        "labelprop_k3": _q_lp,
+        "triangle_total": _q_tri_total,
+        "triangle_per_vertex": _q_tri_per_vertex,
+        "doc_exact_dedup": _q_exact_dedup,
+        "doc_token_stats": _q_token_stats,
+        "doc_lang_markers": _q_lang_markers,
+        "emb_cosine_scores": _q_cosine,
+        "doc_minhash_lsh": _q_minhash_lsh,
+        "pages_ingest_degrees": _q_pages_ingest,
+        "emb_knn_top5": _q_knn,
+        "doc_simhash": _q_simhash,
+        "weighted_pagerank_k5": _q_wpagerank,
+        "weighted_sssp_k6": _q_wsssp,
+        "doc_ngram_jaccard": _q_jaccard,
+        "emb_ivf_top5": _q_ivf,
+        "emb_near_dup_pairs": _q_emb_neardup,
+        "doc_fingerprints": _q_fingerprints,
+        "hits_k3": _q_hits,
+        "ppr_k5": _q_ppr,
+        "pages_host_graph": _q_host_graph,
+        "kcore3_chain_r5": _q_kcore,
+        "doc_dedup_clusters": _q_dedup_clusters,
+        "doc_ngram_counts": _q_ngram_counts,
+        "clustering_coeff": _q_clustering,
+        "pages_anchor_stats": _q_anchor_stats,
+        "emb_knn_blas_top5": _q_knn_blas,
+    }
 
 
-_BASE_ORACLES12 = oracle_sql
-
-
-def oracle_sql() -> dict[str, str]:  # noqa: F811
-    o = dict(_BASE_ORACLES12())
-    o["emb_knn_blas_top5"] = _KNN_SQL
-    return o
+def oracle_sql() -> dict[str, str]:
+    return {
+        "edge_build": TESTDATA_EDGES_SQL,
+        "edge_build_tri": TESTDATA_TRI_EDGES_SQL,
+        "out_degrees": _DEGREES_SQL,
+        "degree_histogram": _DEGREE_HIST_SQL,
+        "pagerank_k5": _pagerank_sql(PR_K),
+        "cc_k8": _cc_sql(CC_K),
+        "bfs_k6": _bfs_sql(BFS_K, BFS_SOURCE),
+        "labelprop_k3": _lp_sql(LP_K),
+        "triangle_total": _TRI_TOTAL_SQL,
+        "triangle_per_vertex": _TRI_PER_VERTEX_SQL,
+        "doc_exact_dedup": _EXACT_DEDUP_SQL,
+        "doc_token_stats": _TOKEN_STATS_SQL,
+        "doc_lang_markers": _LANG_MARKER_SQL,
+        "emb_cosine_scores": _COSINE_SQL,
+        "emb_knn_top5": _KNN_SQL,
+        "weighted_pagerank_k5": _wpagerank_sql(WPR_K),
+        "weighted_sssp_k6": _wsssp_sql(WSSSP_K, 0),
+        "doc_ngram_jaccard": _JACCARD_SQL,
+        "doc_simhash": _simhash_sql(),
+        "doc_minhash_lsh": _JACCARD_SQL,
+        "pages_ingest_degrees": _PAGES_DEGREES_SQL,
+        "emb_ivf_top5": _KNN_SQL,
+        "emb_near_dup_pairs": _EMB_NEARDUP_SQL,
+        "doc_fingerprints": _FINGERPRINT_SQL,
+        "hits_k3": _hits_sql(HITS_K),
+        "ppr_k5": _ppr_sql(PPR_K, PPR_SOURCES),
+        "pages_host_graph": _HOST_GRAPH_SQL,
+        "kcore3_chain_r5": _KCORE_SQL,
+        "doc_dedup_clusters": _dedup_clusters_sql(DEDUP_CC_K),
+        "doc_ngram_counts": _NGRAM_COUNTS_SQL,
+        "clustering_coeff": _CLUSTERING_SQL,
+        "pages_anchor_stats": _ANCHOR_STATS_SQL,
+        "emb_knn_blas_top5": _KNN_SQL,
+    }

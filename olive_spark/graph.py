@@ -124,7 +124,7 @@ class Graph:
             # plan — so the per-partition E-row sort at build time only
             # ever served a sort-merge fallback nothing takes (same
             # finding that removed the symmetrized/reversed layout
-            # sorts). The CSR fast path np.argsorts its own arrays.
+            # sorts).
             edges = edges.repartition(num_partitions, "src").cache()
         if vertices is None:
             # Fallback when no explicit id space is given: union of endpoints.

@@ -285,33 +285,6 @@ class PregelResult:
 _RUN_COUNTER = itertools.count()
 
 
-def _local_ckpt(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint with an optionally overridden storage level.
-
-    OLIVE_SNAPSHOT_LEVEL (e.g. MEMORY_ONLY) overrides Spark's
-    MEMORY_AND_DISK default for the per-superstep snapshots — the
-    V-proportional weakly-scaling term in the superstep (BENCH.md);
-    read per call so benchmarks can A/B it without re-importing.
-    """
-    import os
-
-    level = os.environ.get("OLIVE_SNAPSHOT_LEVEL")
-    if level:
-        from pyspark.storagelevel import StorageLevel
-
-        sl = getattr(StorageLevel, level, None)
-        if not isinstance(sl, StorageLevel):
-            valid = sorted(
-                n for n in vars(StorageLevel) if isinstance(getattr(StorageLevel, n), StorageLevel)
-            )
-            raise ValueError(
-                f"OLIVE_SNAPSHOT_LEVEL={level!r} is not a pyspark StorageLevel; "
-                f"valid names: {', '.join(valid)}"
-            )
-        return df.localCheckpoint(eager=False, storageLevel=sl)
-    return df.localCheckpoint(eager=False)
-
-
 def _free_checkpoint(df: DataFrame | None) -> bool:
     """Unpersist the RDD behind a localCheckpointed DataFrame.
 
@@ -586,7 +559,7 @@ def run_loop(
         else:
             state = init(graph)
             if state is not None:
-                state = _local_ckpt(state)
+                state = state.localCheckpoint(eager=False)
                 row = state.agg(*barrier).first()
 
         metrics: list[dict] = []
@@ -596,7 +569,7 @@ def run_loop(
         fresh: list[DataFrame] = []
 
         def snap(df: DataFrame) -> DataFrame:
-            df = _local_ckpt(df)
+            df = df.localCheckpoint(eager=False)
             fresh.append(df)
             return df
 
@@ -619,7 +592,7 @@ def run_loop(
                     n, new_state.observe(obs, *barrier), None)
                 prev, row = row, Row(**obs.get)
             else:
-                new_state = _local_ckpt(new_state)
+                new_state = new_state.localCheckpoint(eager=False)
                 prev, row = row, new_state.agg(*barrier).first()
             fresh.append(new_state)
             # the superseded snapshots are no longer referenced

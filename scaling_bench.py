@@ -213,17 +213,9 @@ def main():
     print(json.dumps(summary))
 
     stamp = time.strftime("%Y-%m-%d %H:%M:%S")
-    # A/B env knobs in effect (inherited by the worker subprocesses) —
-    # recorded so campaign tables are self-describing
-    knobs = {
-        k: os.environ[k]
-        for k in ("OLIVE_SNAPSHOT_LEVEL",)
-        if os.environ.get(k)
-    }
-    knob_note = f" [env: {knobs}]" if knobs else ""
     with open(os.path.join(repo, "BENCH.md"), "a") as fh:
         fh.write(
-            f"\n## Scaling run {stamp}{knob_note}\n\n"
+            f"\n## Scaling run {stamp}\n\n"
             f"| config | median edges/sec/superstep | pure-compute baseline sec |\n"
             f"|---|---|---|\n"
             f"| local[{args.low}] | {summary[f'eps_local{args.low}']:,} | "

@@ -37,7 +37,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from olive_spark.session import get_spark
-from olive_spark.pregel import _free_checkpoint, _local_ckpt, stable_partitioning
+from olive_spark.pregel import _free_checkpoint, stable_partitioning
 
 cpus = int(sys.argv[1]); n_verts = int(sys.argv[2]); rounds = int(sys.argv[3])
 parts = 4 * cpus
@@ -48,15 +48,16 @@ with stable_partitioning(spark):
              .select(F.col("id"), (F.col("id") % 100).alias("outdeg"),
                      F.lit(1.0).alias("rank"))
              .repartition(parts, "id"))
-    state = _local_ckpt(state)
+    state = state.localCheckpoint(eager=False)
     state.count()
     # warmup round
-    s2 = _local_ckpt(state.withColumn("rank", F.col("rank") * 0.85 + 0.15))
+    s2 = state.withColumn("rank", F.col("rank") * 0.85 + 0.15).localCheckpoint(eager=False)
     s2.count(); _free_checkpoint(state); state = s2
     times = []
     for _ in range(rounds):
         t0 = time.monotonic()
-        new = _local_ckpt(state.withColumn("rank", F.col("rank") * 0.85 + 0.15))
+        new = state.withColumn("rank", F.col("rank") * 0.85 + 0.15).localCheckpoint(
+            eager=False)
         new.agg(F.sum("rank")).first()
         times.append((time.monotonic() - t0) * 1000.0)
         _free_checkpoint(state); state = new

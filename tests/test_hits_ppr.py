@@ -161,15 +161,21 @@ def test_host_graph_rollup(spark):
 
     n, e = chain_graph(12)
     pages = synth_pages(spark, n, e, num_partitions=4)
+    hosts = host_graph_edges(pages)
     got = {
         (r["src_host"], r["dst_host"]): r["n_links"]
-        for r in host_graph_edges(pages).collect()
+        for r in hosts.collect()
     }
     exp = {}
     for s, d in e:
         key = (f"site{s % 97}.example", f"site{d % 97}.example")
         exp[key] = exp.get(key, 0) + 1
     assert got == exp
+    # the host parse stays JVM-side (F.parse_url): the only Python nodes
+    # are the Arrow-batch page synth and link extraction, never a
+    # row-at-a-time BatchEvalPython
+    plan = hosts._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan, plan
 
 
 def test_host_graph_aggregates_across_pages(spark):

@@ -94,13 +94,3 @@ def test_partition_count_invariance(spark):
         g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=p)
         outs.append(ranks_vec(pagerank_fixed(g, iterations=10), n))
     assert np.allclose(outs[0], outs[1], atol=1e-12)
-
-
-def test_snapshot_level_validated(spark, monkeypatch):
-    """OLIVE_SNAPSHOT_LEVEL must name a pyspark StorageLevel; a bad value
-    raises clearly instead of falling back silently."""
-    n, e = grid_graph()
-    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
-    monkeypatch.setenv("OLIVE_SNAPSHOT_LEVEL", "MEMORY_ONLY2")
-    with pytest.raises(ValueError, match="OLIVE_SNAPSHOT_LEVEL"):
-        pagerank_fixed(g, iterations=2)

@@ -88,6 +88,24 @@ def test_minhash_deterministic(spark):
     s1 = {r["doc_id"]: r["sig"] for r in minhash_signatures(docs, num_hashes=8).collect()}
     s2 = {r["doc_id"]: r["sig"] for r in minhash_signatures(docs, num_hashes=8).collect()}
     assert s1 == s2
+    # plan: the k per-seed mins are k aggregate expressions over ONE
+    # shingle explode (exactly k xxhash64 calls, 1 Generate, 1 Aggregate);
+    # the default maxToStringFields would print "... N more fields" and
+    # undercount the hash calls
+    key = "spark.sql.debug.maxToStringFields"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "200")
+    try:
+        sig = minhash_signatures(docs, num_hashes=32)
+        plan = sig._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert plan.count("xxhash64(shingle") == 32, plan
+    assert plan.count("Generate ") == 1, plan
+    assert plan.count("Aggregate ") == 1, plan
 
 
 def test_minhash_near_duplicates_equals_exact(spark):
@@ -232,6 +250,14 @@ def test_brute_force_knn_arrow_equals_sql_path(spark):
         for r in brute_force_knn_arrow(corpus, queries, k=5).collect()
     )
     assert got == want
+    # plan: the corpus streams straight into the MapInPandas scorer; the
+    # query's only Exchange is the window merge of per-batch top-ks,
+    # printed above (a tree parent of) the scorer
+    unsplit = brute_force_knn_arrow(emb_df(spark, vecs), queries, k=5)
+    lines = unsplit._jdf.queryExecution().executedPlan().toString().splitlines()
+    exchanges = [i for i, l in enumerate(lines) if "Exchange" in l and "ReusedExchange" not in l]
+    scorer = [i for i, l in enumerate(lines) if "MapInPandas" in l]
+    assert len(exchanges) == 1 and scorer and exchanges[0] < scorer[0], "\n".join(lines)
 
 
 def test_lsh_dim_param_avoids_inference_job(spark):
