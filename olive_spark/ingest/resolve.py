@@ -6,10 +6,12 @@ Two id-assignment strategies:
   layer B). Deterministic and dense (0..N-1) — the reference's dense id
   space (csrGraph.h:129-135). Costs a global sort + row_number; fine to
   ~10^9 urls, the strategy used for oracle-comparable tests.
-- ``hash``: id = xxhash64(url) — shuffle-free, collision probability
-  ~N^2/2^64 (≈3e-5 at 10^12 docs — detected by a count check), the
-  100TB path. Ids are sparse, which the engine supports (vertex table
-  is explicit).
+- ``hash``: id = xxhash64(url) — shuffle-free, the 100TB path. It
+  assumes no two urls share a hash (collision probability ~N^2/2^64,
+  ≈3e-5 at 10^12 docs); nothing checks that, and a collision would
+  merge two pages into one vertex. Detecting collisions is ROADMAP
+  item 4. Ids are sparse, which the engine supports (vertex table is
+  explicit).
 
 Edges keep duplicates (reference semantics); links to urls outside the
 page set are dropped (dangling *targets* — distinct from dangling

@@ -38,6 +38,13 @@ class SuperstepMetricsCollector:
             self._store = spark._jsparkSession.sparkContext().statusStore()
         except Exception:
             self._store = None
+        try:
+            # the JVM-wide histogram the code generator updates once
+            # per Janino compile; held here so a read is one py4j call
+            self._compiles = (spark._jvm.org.apache.spark.metrics.source
+                              .CodegenMetrics.METRIC_COMPILATION_TIME())
+        except Exception:
+            self._compiles = None
 
     def tag(self, superstep: int) -> None:
         """Mark all jobs submitted from now (on this driver thread) as
@@ -65,6 +72,18 @@ class SuperstepMetricsCollector:
 
     def __exit__(self, *exc) -> None:
         self.clear()
+
+    def compile_count(self) -> int | None:
+        """Classes the JVM's code generator has compiled so far (None
+        when unreadable). The count is JVM-wide, so a difference of two
+        reads is the compiles of what ran in between only while one
+        driver thread drives the session."""
+        if self._compiles is None:
+            return None
+        try:
+            return int(self._compiles.getCount())
+        except Exception:
+            return None
 
     def _await_jobs_settled(self, job_ids, timeout_s: float = 2.0) -> None:
         """Bounded wait for the listener bus to deliver the jobs' ends.

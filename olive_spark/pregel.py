@@ -214,7 +214,7 @@ class _LazyMetricsList(list):
     are still applied per superstep during the loop (a free
     driver-local property), so the deferred store read returns the
     exact same numbers; only WHEN they are read moves. ``superstep`` /
-    ``ms`` / ``active`` stay eagerly recorded in the loop.
+    ``ms`` / ``active`` / ``compiles`` stay eagerly recorded in the loop.
 
     Caveat (documented best-effort contract of metrics.py): the
     AppStatusStore retains a bounded number of jobs/stages (Spark
@@ -534,9 +534,14 @@ def run_loop(
     of the written snapshot (the resume load still runs an aggregate
     over it); freeing the superseded snapshots (failures counted in
     ``free_failures``); and per-step job tags with one metrics record
-    per step ({superstep, ms, active} plus the stage totals of the
-    step's jobs, read lazily — see _LazyMetricsList — or inline on the
-    durable path, where ``CheckpointStore.log_superstep`` persists them).
+    per step ({superstep, ms, active, compiles} plus the stage totals of
+    the step's jobs, read lazily — see _LazyMetricsList — or inline on
+    the durable path, where ``CheckpointStore.log_superstep`` persists
+    them). ``compiles`` is the change over the step in the JVM's count
+    of generated classes compiled (one py4j read per step, no job); 0
+    once the step's plan is in Spark's codegen class cache. Like the
+    conf scope, it assumes one driver thread drives the session: the
+    count is JVM-wide, so another thread's queries would be counted too.
 
     The initial state is snapshotted and passed through the barrier
     too (one job), so step 1 sees ``row`` of the init state. The
@@ -573,6 +578,7 @@ def run_loop(
             fresh.append(df)
             return df
 
+        compiled = collector.compile_count()
         while n < max_steps:
             t0 = time.monotonic()
             n += 1
@@ -599,11 +605,14 @@ def run_loop(
             free_failures += sum(not _free_checkpoint(df) for df in live)
             live, fresh, state = fresh, [], new_state
             converged = stop(row, prev, n)
+            count = collector.compile_count()
             record = {
                 "superstep": n,
                 "ms": None,
                 "active": int(row["active"] or 0) if "active" in row.__fields__ else None,
+                "compiles": None if None in (count, compiled) else count - compiled,
             }
+            compiled = count
             if checkpoint_store is not None:
                 record.update(collector.collect(n))
             record["ms"] = (time.monotonic() - t0) * 1000.0

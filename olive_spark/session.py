@@ -28,6 +28,20 @@ def get_spark(
     - Arrow enabled for the pandas-UDF ingest path (no per-row Python).
     - UTC session timezone so parquet timestamps compare cleanly with
       the DuckDB oracle.
+    - Whole-stage generated classes cached up to 1000
+      (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100).
+      The conf is static, so only the session factory can set it: a
+      running session refuses ``spark.conf.set`` on it. The engine's
+      working sets exceed the default. perfbench's ``rank-power`` uses
+      about 160 distinct classes per JVM (22 in set-up, about 140 in
+      the cold job, the same ones again in every warm job),
+      ``crawl-chain`` 84 per job, and the fixture suite of
+      ``tests/test_codegen_cache.py`` about 150. At 100 the cache evicts
+      classes before they are reused, so every warm ``rank-power`` job
+      recompiled 136 classes with Janino and reloaded them cold into
+      the JIT; at 1000 it recompiles none. 1000 leaves more than
+      6x headroom and still bounds the memory (Metaspace) that
+      generated classes hold.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -59,6 +73,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("OLIVE_SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # Iterative workloads: keep shuffle files bounded.

@@ -44,8 +44,11 @@ def main():
 
     from olive_spark.session import get_spark
 
+    # no console progress bar: it is drawn onto the result lines below,
+    # which a `grep -v "WARN\|Stage"` over the output would then drop
     spark = get_spark(app_name="verify_contract", master="local[8]",
-                      shuffle_partitions=8)
+                      shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     t0 = time.time()
     res = m.entry(spark)

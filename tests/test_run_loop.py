@@ -78,12 +78,14 @@ def test_nested_degrees_scope_restores_outer_conf(spark, outer_conf):
 
 
 def test_loop_records_share_one_key_set(spark):
-    """pregel programs and k-core report the same per-step record."""
+    """pregel programs and k-core report the same per-step record, and
+    a step whose plan an earlier step compiled compiles no class."""
     g = _chain(spark)
-    runs = [pagerank_fixed(g, 2), connected_components(g), kcore(g, 3, max_rounds=2)]
+    runs = [pagerank_fixed(g, 3), connected_components(g), kcore(g, 3, max_rounds=2)]
     key_sets = {frozenset(m) for r in runs for m in r.metrics}
     assert len(key_sets) == 1, key_sets
-    assert {"superstep", "ms", "active", "stages", "tasks"} <= next(iter(key_sets))
+    assert {"superstep", "ms", "active", "compiles", "stages", "tasks"} <= next(iter(key_sets))
+    assert [m["compiles"] for m in runs[0].metrics][1:] == [0, 0]
     kc = runs[2]
     assert [m["superstep"] for m in kc.metrics] == [1, 2]
     assert [m["active"] for m in kc.metrics] == [2, 2]  # one peel per chain end
