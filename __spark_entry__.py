@@ -279,10 +279,10 @@ def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from olive_spark.algorithms.cc import connected_components_fixed
+    from olive_spark.algorithms.cc import connected_components
 
     g = testdata_tri_graph(spark, sf_dir)
-    res = connected_components_fixed(g, iterations=CC_K)
+    res = connected_components(g, max_iterations=CC_K)
     return res.state.select("id", F.col("component").cast("long").alias("component"))
 
 

@@ -30,6 +30,10 @@ def connected_components(
     checkpoint_every: int = 1,
     resume: bool = False,
 ) -> PregelResult:
+    """Min-label components; ``max_iterations=k`` stops after k
+    synchronous rounds with the same labels as k full-frontier rounds
+    (``oracle.cc_min_label_fixed``): a vertex whose label did not change
+    has nothing new to send."""
     g = graph.symmetrized() if symmetrize else graph
     if max_iterations is None:
         max_iterations = graph.vertex_count() + 1
@@ -52,21 +56,6 @@ def connected_components(
     return pregel(g, program, max_iterations=max_iterations,
                   checkpoint_store=checkpoint_store, checkpoint_every=checkpoint_every,
                   resume=resume)
-
-
-def connected_components_fixed(graph: Graph, iterations: int) -> PregelResult:
-    """Exactly `iterations` synchronous min-label rounds (oracle parity)."""
-    g = graph.symmetrized()
-    program = PregelProgram(
-        init={"component": F.col("id")},
-        gather=src("component"),
-        agg=F.min,
-        update={"component": ACCUM()},
-        cond=ACCUM() < F.col("component"),
-        accum_default=None,
-        full_frontier=True,  # fixed rounds: no frontier, no early stop
-    )
-    return pregel(g, program, max_iterations=iterations)
 
 
 def connected_components_stars(

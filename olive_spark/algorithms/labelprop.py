@@ -2,10 +2,9 @@
 
 Not in the reference repo; included per the north rule. Same
 edge-phase/vertex-phase skeleton as the other apps, but the reduce is a
-frequency-argmax rather than a single commutative aggregate, expressed
-with the ``agg_df`` escape hatch as ONE built-in aggregation (r6):
+frequency-argmax, expressed as ONE built-in aggregate (r6):
 
-    msgs(id, label) -> groupBy(id).agg(mode(label, deterministic=True))
+    msgs(id, g) -> groupBy(id).agg(mode(g, deterministic=True))
 
 ``mode(col, True)`` is Spark's typed-imperative frequency-argmax whose
 tie-break (greatest frequency, then LOWEST value) is exactly this
@@ -30,21 +29,10 @@ sort-based fallback stays — it is also the memory-safety story at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
 from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, src
-
-
-def _mode_agg(msgs: DataFrame) -> DataFrame:
-    # frequency-argmax in ONE exchange: mode(col, deterministic=True)
-    # returns the most frequent label, ties -> lowest label — the exact
-    # (cnt desc, label asc) tie-break the old two-groupBy shape
-    # (groupBy(id, g).count() -> max_by((cnt, -g))) computed with a
-    # second exchange (r6; A/B + exact-equality evidence in the module
-    # docstring).
-    return msgs.groupBy("id").agg(F.mode("g", True).alias("accum"))
 
 
 def label_propagation(
@@ -61,8 +49,9 @@ def label_propagation(
     program = PregelProgram(
         init={"label": F.col("id")},
         gather=src("label"),
-        agg=None,
-        agg_df=_mode_agg,
+        # frequency-argmax in ONE exchange: most frequent label, ties
+        # -> lowest label (module docstring)
+        agg=lambda msg: F.mode(msg, True),
         update={"label": ACCUM()},
         cond=None,
         accum_default=None,  # no neighbors -> keep label (cond AND not-null)

@@ -19,55 +19,71 @@ superstep barrier + vertexReduce, oliver.h:176-183, fused).
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from olive_spark.graph import Graph
-from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, src
+from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, edge, pregel, src
 
 
-def pagerank(
-    graph: Graph,
-    damping: float = 0.85,
-    epsilon: float = 1e-7,
-    max_iterations: int = 100,
-    checkpoint_store=None,
-    checkpoint_every: int = 1,
-    resume: bool = False,
-) -> PregelResult:
-    n = graph.vertex_count()
-    one_over_n = 1.0 / n
-    add_constant = (1.0 - damping) * one_over_n
+def _rank_program(
+    gather: Column,
+    rank0: Column,
+    teleport: Column,
+    damping: float,
+    epsilon: float | None,
+    static: dict[str, Column] | None = None,
+) -> PregelProgram:
+    """The one PageRank program: rank starts at ``rank0`` and becomes
+    ``damping * accum + teleport`` (PR_vertex_F, PageRank.cu:63-75);
+    ``static`` columns are set once and carried unchanged.
 
-    # delta exists only to drive convergence (PR_vertex_F records it for
-    # the vertexReduce fold, PageRank.cu:69-74). With epsilon=None
-    # (fixed-round/bench runs) it is dead state: dropping it narrows the
-    # per-superstep snapshot — the V-proportional weakly-scaling term —
-    # by one double column and one subtraction per row.
-    init = {"rank": F.lit(one_over_n)}
-    update = {"rank": F.lit(damping) * ACCUM() + F.lit(add_constant)}
+    delta exists only to drive convergence (PR_vertex_F records it for
+    the vertexReduce fold, PageRank.cu:69-74). With epsilon=None
+    (fixed-round/bench runs) it is dead state: dropping it narrows the
+    per-superstep snapshot — the V-proportional weakly-scaling term —
+    by one double column and one subtraction per row. With epsilon,
+    err = sum|delta| < eps is evaluated inside the superstep barrier
+    action (zero extra jobs) — the reference's vertexReduce fold
+    (PageRank.cu:126-127).
+    """
+    new_rank = F.lit(damping) * ACCUM() + teleport
+    init = {**(static or {}), "rank": rank0}
+    update = {"rank": new_rank}
+    halt_agg = halt_pred = None
     if epsilon is not None:
-        init["delta"] = F.lit(one_over_n)
-        update["delta"] = (
-            F.lit(damping) * ACCUM() + F.lit(add_constant) - F.col("rank")
-        )
+        init["delta"] = rank0
+        update["delta"] = new_rank - F.col("rank")
+        halt_agg = F.sum(F.abs(F.col("delta")))
 
-    program = PregelProgram(
+        def halt_pred(err, _step):
+            return err is not None and err < epsilon
+    return PregelProgram(
         init=init,
-        gather=src("rank") / src("outdeg"),
+        gather=gather,
         agg=F.sum,
         update=update,
         cond=None,
         accum_default=0.0,  # vertices with no in-edges gather 0 (oliver.h:127)
         full_frontier=True,
-        # err = sum|delta| < eps, evaluated inside the superstep barrier
-        # action (zero extra jobs) — the reference's vertexReduce fold
-        # (PageRank.cu:126-127).
-        halt_agg=F.sum(F.abs(F.col("delta"))) if epsilon is not None else None,
-        halt_pred=(
-            (lambda err, _step: err is not None and err < epsilon)
-            if epsilon is not None
-            else None
-        ),
+        halt_agg=halt_agg,
+        halt_pred=halt_pred,
+    )
+
+
+def pagerank(
+    graph: Graph,
+    damping: float = 0.85,
+    epsilon: float | None = 1e-7,
+    max_iterations: int = 100,
+    checkpoint_store=None,
+    checkpoint_every: int = 1,
+    resume: bool = False,
+) -> PregelResult:
+    one_over_n = 1.0 / graph.vertex_count()
+    program = _rank_program(
+        src("rank") / src("outdeg"), F.lit(one_over_n),
+        F.lit((1.0 - damping) * one_over_n), damping, epsilon,
     )
     return pregel(
         graph,
@@ -82,10 +98,7 @@ def pagerank(
 def pagerank_fixed(graph: Graph, iterations: int, damping: float = 0.85) -> PregelResult:
     """Exactly `iterations` supersteps, no convergence action — used for
     oracle-parity runs and benchmarking steady-state superstep cost."""
-    res = pagerank(
-        graph, damping=damping, epsilon=None, max_iterations=iterations
-    )
-    return res
+    return pagerank(graph, damping=damping, epsilon=None, max_iterations=iterations)
 
 
 #: seed lists at or below this size are inlined as an `isin` literal
@@ -121,64 +134,32 @@ def personalized_pagerank(
     generalizes to it by changing only the init/update constants
     (PageRank.cu:77-87,63-75).
     """
-    from pyspark.sql import DataFrame
-
-    vertex_attrs = None
+    seed_df = None
     if isinstance(sources, DataFrame):
         seed_df = sources.select(F.col("id").cast("long").alias("id")).distinct()
         n_seeds = seed_df.count()  # one tiny job on the (small) seed side
-        if n_seeds == 0:
-            raise ValueError("sources must be non-empty")
-        pref = 1.0 / n_seeds
-        vertex_attrs = seed_df.withColumn("_is_seed", F.lit(True))
-        pref_expr = F.when(
-            F.coalesce(F.col("_is_seed"), F.lit(False)), F.lit(pref)
-        ).otherwise(F.lit(0.0))
     else:
         srcs = sorted(set(int(s) for s in sources))
-        if not srcs:
-            raise ValueError("sources must be non-empty")
-        pref = 1.0 / len(srcs)
-        if len(srcs) <= PPR_SEED_LITERAL_MAX:
-            pref_expr = (
-                F.when(F.col("id").isin(srcs), F.lit(pref)).otherwise(F.lit(0.0))
-            )
-        else:
-            spark = graph.edges.sparkSession
-            vertex_attrs = spark.createDataFrame(
+        n_seeds = len(srcs)
+        if n_seeds > PPR_SEED_LITERAL_MAX:
+            seed_df = graph.edges.sparkSession.createDataFrame(
                 [(s,) for s in srcs], schema="id long"
-            ).withColumn("_is_seed", F.lit(True))
-            pref_expr = F.when(
-                F.coalesce(F.col("_is_seed"), F.lit(False)), F.lit(pref)
-            ).otherwise(F.lit(0.0))
+            )
+    if n_seeds == 0:
+        raise ValueError("sources must be non-empty")
+    pref = 1.0 / n_seeds
+    vertex_attrs = None
+    if seed_df is None:
+        is_seed = F.col("id").isin(srcs)
+    else:
+        vertex_attrs = seed_df.withColumn("_is_seed", F.lit(True))
+        is_seed = F.coalesce(F.col("_is_seed"), F.lit(False))
+    pref_expr = F.when(is_seed, F.lit(pref)).otherwise(F.lit(0.0))
 
-    # delta only with epsilon (same dead-state elimination as pagerank())
-    init = {"pref": pref_expr, "rank": pref_expr}
-    update = {
-        "rank": F.lit(damping) * ACCUM() + F.lit(1.0 - damping) * F.col("pref"),
-    }
-    if epsilon is not None:
-        init["delta"] = pref_expr
-        update["delta"] = (
-            F.lit(damping) * ACCUM()
-            + F.lit(1.0 - damping) * F.col("pref")
-            - F.col("rank")
-        )
-
-    program = PregelProgram(
-        init=init,
-        gather=src("rank") / src("outdeg"),
-        agg=F.sum,
-        update=update,
-        cond=None,
-        accum_default=0.0,
-        full_frontier=True,
-        halt_agg=F.sum(F.abs(F.col("delta"))) if epsilon is not None else None,
-        halt_pred=(
-            (lambda err, _step: err is not None and err < epsilon)
-            if epsilon is not None
-            else None
-        ),
+    program = _rank_program(
+        src("rank") / src("outdeg"), pref_expr,
+        F.lit(1.0 - damping) * F.col("pref"), damping, epsilon,
+        static={"pref": pref_expr},
     )
     return pregel(
         graph,
@@ -229,35 +210,10 @@ def weighted_pagerank(
         _vertex_count=graph._vertex_count,
         _edge_count=graph._edge_count,
     )
-    n = g.vertex_count()
-    one_over_n = 1.0 / n
-    add_constant = (1.0 - damping) * one_over_n
-
-    from olive_spark.pregel import edge
-
-    # same dead-state elimination as pagerank(): delta only with epsilon
-    init = {"rank": F.lit(one_over_n)}
-    update = {"rank": F.lit(damping) * ACCUM() + F.lit(add_constant)}
-    if epsilon is not None:
-        init["delta"] = F.lit(one_over_n)
-        update["delta"] = (
-            F.lit(damping) * ACCUM() + F.lit(add_constant) - F.col("rank")
-        )
-
-    program = PregelProgram(
-        init=init,
-        gather=src("rank") * edge("weight"),
-        agg=F.sum,
-        update=update,
-        cond=None,
-        accum_default=0.0,
-        full_frontier=True,
-        halt_agg=F.sum(F.abs(F.col("delta"))) if epsilon is not None else None,
-        halt_pred=(
-            (lambda err, _step: err is not None and err < epsilon)
-            if epsilon is not None
-            else None
-        ),
+    one_over_n = 1.0 / g.vertex_count()
+    program = _rank_program(
+        src("rank") * edge("weight"), F.lit(one_over_n),
+        F.lit((1.0 - damping) * one_over_n), damping, epsilon,
     )
     res = pregel(g, program, max_iterations=max_iterations, **kwargs)
     # release only the normalized edge layout (and any compact loop

@@ -19,7 +19,7 @@ Plan shape (round-6 optimization pass, guide §2.3/§2.4/§3.1):
   degree aggregation, the orientation join and the closing-edge side;
 - per-vertex simple degrees are one explode+groupBy (not a 2x union
   scan) and are BROADCAST onto the edge set when the vertex count is
-  small enough (env ``OLIVE_TRI_DEG_BROADCAST_MAX``, default 4M rows)
+  small enough (``TRI_DEG_BROADCAST_MAX``, 4M rows)
   — at web scale the fallback is the shuffle join;
 - the oriented edge set is repartitioned by the wedge pivot ``u`` and
   cached, so the wedge self-join is a ZERO-exchange co-partitioned
@@ -37,8 +37,6 @@ to a, b and c — explode + groupBy.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,8 +46,8 @@ from olive_spark.pregel import stable_partitioning
 #: broadcast the (vertex, degree) table onto the edge set below this
 #: many vertices (~128MB built at the default); above it — or on a
 #: cluster where executors are leaner — the degree attach falls back to
-#: shuffle joins. Override with OLIVE_TRI_DEG_BROADCAST_MAX.
-TRI_DEG_BROADCAST_MAX = int(os.environ.get("OLIVE_TRI_DEG_BROADCAST_MAX", "4000000"))
+#: shuffle joins.
+TRI_DEG_BROADCAST_MAX = 4_000_000
 
 
 def _undirected_simple(graph: Graph) -> DataFrame:

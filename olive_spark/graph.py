@@ -27,6 +27,7 @@ partitions for out-degree hubs.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +43,12 @@ EDGE_SCHEMA = T.StructType(
 )
 
 VERTEX_SCHEMA = T.StructType([T.StructField("id", T.LongType(), False)])
+
+#: target edge rows per partition of the compact loop layout
+#: (Graph.loop_layout): sized so per-task data work dominates the
+#: ~2-3 ms scheduling overhead; on a cluster the same bound holds per
+#: executor core
+LOOP_ROWS_PER_PARTITION = 100_000
 
 
 def _read_header_line(spark: SparkSession, path: str, comment: str) -> list[str]:
@@ -430,7 +437,7 @@ class Graph:
             )
         return self._symmetrized
 
-    def loop_layout(self, rows_per_partition: int | None = None) -> "Graph":
+    def loop_layout(self) -> "Graph":
         """Scale-adaptive partitioning for superstep loops (guide §2.2:
         fewer, larger partitions when per-task data is tiny).
 
@@ -439,10 +446,10 @@ class Graph:
         graph spread over 32 partitions runs every superstep's ~3 stages
         at 32 tasks each for <20k rows of work per task. This returns a
         memoized COMPACT re-layout of the graph —
-        ``P = ceil(E / rows_per_partition)`` partitions, capped by the
-        graph's own ``num_partitions`` — so each task carries at least
-        ~rows_per_partition edge rows and the per-task scheduling term
-        stays small against the data work. Derived from the MEASURED
+        ``P = ceil(E / LOOP_ROWS_PER_PARTITION)`` partitions, capped by
+        the graph's own ``num_partitions`` — so each task carries at
+        least ~LOOP_ROWS_PER_PARTITION edge rows and the per-task
+        scheduling term stays small against the data work. Derived from the MEASURED
         edge count (the cached edge table's count, memoized), never from
         the core count: at a larger scale factor the same rule keeps or
         raises the partition count (capped at the caller's parallelism),
@@ -457,20 +464,8 @@ class Graph:
         is returned unchanged. Degrees are re-exchanged from the
         parent's cached table, not re-aggregated. Ownership follows the
         other derived layouts: ``self.unpersist()`` releases it.
-
-        rows_per_partition: default ``OLIVE_LOOP_ROWS_PER_PARTITION``
-        (env, 100_000) — sized so per-task data work dominates the
-        ~2-3 ms scheduling overhead; on a cluster the same bound holds
-        per executor core.
         """
-        import math
-        import os
-
-        if rows_per_partition is None:
-            rows_per_partition = int(
-                os.environ.get("OLIVE_LOOP_ROWS_PER_PARTITION", "100000")
-            )
-        if rows_per_partition <= 0 or self.num_partitions <= 1:
+        if self.num_partitions <= 1:
             return self
         if self._edge_count is None:
             # never pay a count job just to decide: compaction is only
@@ -479,7 +474,7 @@ class Graph:
             # symmetrized()/from_edge_list(), or set by the caller)
             return self
         e = self._edge_count
-        p = max(1, math.ceil(e / rows_per_partition))
+        p = max(1, math.ceil(e / LOOP_ROWS_PER_PARTITION))
         if p > self.num_partitions // 2:
             return self
         if self._compact is None or self._compact.num_partitions != p:

@@ -428,7 +428,6 @@ def dedup_clusters(
     pairs: DataFrame,
     doc_col: str = "doc_id",
     iterations: int | None = None,
-    method: str = "auto",
     round_metrics: list | None = None,
 ) -> DataFrame:
     """Collapse verified near-dup PAIRS into clusters and pick one
@@ -446,18 +445,15 @@ def dedup_clusters(
     the corpus, and the min-label fixpoint is the deterministic
     canonical choice.
 
-    iterations=None runs CC to convergence (unique fixpoint); a fixed
-    iteration count gives bounded-round semantics for oracle parity.
-
-    method: "stars" = large-star/small-star contraction (O(log n)
-    rounds — Kiveris et al. SoCC'14); "minlabel" = min-label Pregel
-    propagation (O(diameter) rounds); "auto" (default) = stars for the
-    convergence path (templated pages chain near-dups A~B~C~..., so
-    pair-graph diameters are realistically large and min-label would
-    need one round per hop), min-label only when a fixed iteration
-    count is requested (bounded-round semantics are defined by the
-    propagation operator; stars reaches the same unique fixpoint but
-    its intermediate rounds differ).
+    iterations=None runs large-star/small-star contraction to the
+    unique fixpoint (O(log n) rounds — Kiveris et al. SoCC'14;
+    templated pages chain near-dups A~B~C~..., so pair-graph diameters
+    are realistically large and min-label propagation would need one
+    round per hop). iterations=k runs exactly k min-label rounds
+    instead: bounded-round semantics are defined by the propagation
+    operator (stars reaches the same fixpoint, but its intermediate
+    rounds differ). round_metrics (stars only) receives one
+    {round, edges, ms} record per contraction round.
 
     Scale shape: the ITERATIVE state covers only pair-graph members
     (docs appearing in >= 1 pair — duplicate-rate x corpus, typically
@@ -468,18 +464,9 @@ def dedup_clusters(
     """
     from olive_spark.algorithms.cc import (
         connected_components,
-        connected_components_fixed,
         connected_components_stars,
     )
     from olive_spark.graph import Graph
-
-    if method not in ("auto", "stars", "minlabel"):
-        raise ValueError(f"unknown method {method!r}")
-    if method == "stars" and iterations is not None:
-        raise ValueError(
-            "method='stars' computes the exact fixpoint; fixed-iteration "
-            "bounded-round semantics require method='minlabel'"
-        )
 
     spark = docs.sparkSession
     edges = pairs.select(
@@ -493,12 +480,10 @@ def dedup_clusters(
         .distinct()
     )
     g = Graph.from_edges(spark, edges, vertices=members)
-    if iterations is None and method in ("auto", "stars"):
+    if iterations is None:
         comp = connected_components_stars(g, round_metrics=round_metrics)
-    elif iterations is None:
-        comp = connected_components(g).state
     else:
-        comp = connected_components_fixed(g, iterations=iterations).state
+        comp = connected_components(g, max_iterations=iterations).state
     clusters = comp.select(
         F.col("id").alias(doc_col), F.col("component").alias("canonical_id")
     )

@@ -29,12 +29,12 @@ This is the Spark re-expression of the reference's entire compute API
 Scale design:
 - The edge table is cached hash-partitioned by ``src`` once (Graph);
   each superstep shuffles only the narrow vertex-state table.
-- Small frontiers are broadcast (explicit ``F.broadcast`` hint) below
-  ``broadcast_threshold`` rows — the dense-frontier fast path
+- Small frontiers are broadcast (explicit ``F.broadcast`` hint) up to
+  ``BROADCAST_THRESHOLD`` rows — the dense-frontier fast path
   (vertexSubset.h:87-95) and the north-rule "broadcast of hub
   frontiers". Above the threshold the state probes the cached
   src-partitioned edge table via a co-partitioned SHUFFLE_HASH join
-  (zero exchange on either side). Threshold default 100k (r6 A/B:
+  (zero exchange on either side). Threshold 100k (r6 A/B:
   at 500k full-frontier rows the per-superstep driver broadcast
   build costs ~25% of the superstep; at <=16k the two are at parity
   with a slight broadcast edge for sparse frontiers).
@@ -160,10 +160,11 @@ class PregelProgram:
     gather: Column over the joined (frontier-state ⋈ edges) row; use
             ``src("col")`` for source state, ``edge()`` for edge weight.
             [gather hook — e.g. rank/outdeg, PageRank.cu:53-55]
-    agg:    aggregate over the gathered column — F.sum / F.min / F.max.
-            Must be commutative+associative, like the reference's atomic
-            reduce (README.md:73). BFS's benign-race overwrite
-            (BFS.cu:52-55) is expressed deterministically as F.min.
+    agg:    aggregate over the gathered column — F.sum / F.min / F.max,
+            or label propagation's ``F.mode(g, True)``. Must be
+            mergeable map-side, like the reference's atomic reduce
+            (README.md:73). BFS's benign-race overwrite (BFS.cu:52-55)
+            is expressed deterministically as F.min.
     update: state column name -> new-value expression over
             (old state columns, ``ACCUM``). [update hook, BFS.cu:63-64]
     cond:   gate Column over (old state, ``ACCUM``); rows failing it
@@ -188,18 +189,13 @@ class PregelProgram:
 
     init: dict[str, Column]
     gather: Column
-    agg: Callable[[Column], Column] | None
+    agg: Callable[[Column], Column]
     update: dict[str, Column]
     cond: Column | None = None
     accum_default: Any = None
     full_frontier: bool = False
     halt_agg: Column | None = None
     halt_pred: Callable[[Any, int], bool] | None = None
-    # Escape hatch for non-single-aggregate reduces (e.g. label
-    # propagation's frequency-argmax): maps the message DataFrame
-    # (id, g) -> accumulator DataFrame (id, accum). When set, `agg` is
-    # ignored. Still a pure DataFrame transformation (no driver loop).
-    agg_df: Callable[[DataFrame], DataFrame] | None = None
 
 
 class _LazyMetricsList(list):
@@ -279,6 +275,11 @@ class PregelResult:
         if not _free_checkpoint(self._raw_state or self.state):
             self.free_failures += 1
 
+
+#: frontier-driven programs broadcast the active state up to this many
+#: rows; above it the state probes the edges by a shuffled-hash join
+#: (r6 A/B: OPTIMIZATION_r06.md)
+BROADCAST_THRESHOLD = 100_000
 
 #: per-run_loop-invocation counter feeding the job-tag prefix: id(graph)
 #: alone can be reused and would fold one run's jobs into another's metrics
@@ -387,11 +388,7 @@ def _prepare_superstep_exprs(
     """
     join_cond = F.col("s.id") == F.col("e.src")
     msg_cols = [F.col("e.dst").alias("id"), program.gather.alias("g")]
-    agg_cols = (
-        None
-        if program.agg_df is not None
-        else [program.agg(F.col("g")).alias("accum")]
-    )
+    agg_col = program.agg(F.col("g")).alias("accum")
 
     # post-join projection: old state + the (possibly defaulted) accum.
     # The superseded `_active` is NOT carried: the new frontier flag is
@@ -426,7 +423,7 @@ def _prepare_superstep_exprs(
     return {
         "join_cond": join_cond,
         "msg_cols": msg_cols,
-        "agg_cols": agg_cols,
+        "agg_col": agg_col,
         "post_join_cols": post_join_cols,
         "final_cols": final_cols,
     }
@@ -436,29 +433,22 @@ def _build_superstep(
     edges: DataFrame,
     state: DataFrame,
     program: PregelProgram,
-    state_cols: list[str],
+    exprs: dict,
     frontier_size: int,
-    broadcast_threshold: int,
-    with_outdeg: bool,
-    exprs: dict | None = None,
 ) -> DataFrame:
     """One superstep's edge phase + vertex phase as a lazy DataFrame.
 
-    Extracted from the loop so benchmarks/plan audits can explain the
-    exact per-superstep plan the loop executes. ``exprs`` is the
-    prebuilt loop-invariant Column set (see _prepare_superstep_exprs);
-    the loop passes it once-built, ad-hoc callers may omit it.
+    ``exprs`` is the loop-invariant Column set built once per run by
+    _prepare_superstep_exprs.
 
     Join-strategy policy (measured, see BENCH.md): the active-state
     side is broadcast while small (dense-frontier fast path); above
-    the threshold it is SHUFFLE_HASH — built per-partition in
+    ``BROADCAST_THRESHOLD`` it is SHUFFLE_HASH — built per-partition in
     parallel against the cached src-partitioned edge table, which
     then needs neither an exchange nor a sort. A driver-side
     broadcast build of multi-million-row state is serial and caps
     scaling (Amdahl) — never let Catalyst pick it implicitly here.
     """
-    if exprs is None:
-        exprs = _prepare_superstep_exprs(program, state_cols, with_outdeg)
     # ---- edge phase: gather + reduce --------------------------------
     # Full-frontier programs ALWAYS take the co-partitioned
     # shuffled-hash probe: the state snapshot carries hash(id, P)
@@ -474,15 +464,11 @@ def _build_superstep(
         act = state.filter(F.col("_active"))
         act_hinted = (
             F.broadcast(act)
-            if frontier_size <= broadcast_threshold
+            if frontier_size <= BROADCAST_THRESHOLD
             else act.hint("shuffle_hash")
         )
     j = act_hinted.alias("s").join(edges.alias("e"), exprs["join_cond"])
-    msgs = j.select(*exprs["msg_cols"])
-    if program.agg_df is not None:
-        acc = program.agg_df(msgs)
-    else:
-        acc = msgs.groupBy("id").agg(*exprs["agg_cols"])
+    acc = j.select(*exprs["msg_cols"]).groupBy("id").agg(exprs["agg_col"])
 
     # ---- vertex phase: conditional update ---------------------------
     # acc is at most V rows; shuffle-hash build on it avoids sorting
@@ -639,7 +625,6 @@ def pregel(
     max_iterations: int = 100,
     checkpoint_store=None,
     checkpoint_every: int = 1,
-    broadcast_threshold: int = 100_000,
     resume: bool = False,
     vertex_attrs: DataFrame | None = None,
 ) -> PregelResult:
@@ -684,8 +669,7 @@ def pregel(
 
     def step(g: Graph, state: DataFrame, row: Row, _snap) -> DataFrame:
         frontier_size = int(row["active"] or 0) if frontier_driven else 0
-        return _build_superstep(g.edges, state, program, state_cols, frontier_size,
-                                broadcast_threshold, with_outdeg, exprs)
+        return _build_superstep(g.edges, state, program, exprs, frontier_size)
 
     barrier: list[Column] = []
     if frontier_driven:
@@ -708,7 +692,3 @@ def pregel(
     res.state = res.state.select("id", *[c for c in state_cols if c != "_active"])
     return res
 
-
-def vertex_reduce(state: DataFrame, expr: Column) -> Any:
-    """Global fold over vertex state (Oliver::vertexReduce, oliver.h:176-183)."""
-    return state.agg(expr.alias("r")).first()["r"]

@@ -25,7 +25,7 @@ skew in three explicit places:
    is only scanned, never shuffled).
 
 3. **Hub frontiers (broadcast)** — pregel() broadcasts any frontier
-   under ``broadcast_threshold`` rows, so late BFS/CC supersteps never
+   up to ``pregel.BROADCAST_THRESHOLD`` rows, so late BFS/CC supersteps never
    shuffle the edge table.
 """
 

@@ -126,7 +126,7 @@ def main():
 
     t0 = time.monotonic()
     rounds: list[dict] = []
-    clusters = dedup_clusters(corpus, pairs, method="auto", round_metrics=rounds)
+    clusters = dedup_clusters(corpus, pairs, round_metrics=rounds)
     n_nonself = clusters.filter(F.col("canonical_id") != F.col("doc_id")).count()
     timings["cluster_and_canonicalize"] = round(time.monotonic() - t0, 2)
 

@@ -6,9 +6,10 @@ import numpy as np
 import pytest
 
 from olive_spark import oracle
-from olive_spark.algorithms.cc import connected_components, connected_components_fixed
+from olive_spark.algorithms.cc import connected_components
 from olive_spark.algorithms.labelprop import label_propagation
 from olive_spark.fixtures import (
+    chain_graph,
     grid_graph,
     isolated_graph,
     maxflow_graph,
@@ -53,13 +54,15 @@ def test_cc(spark, name, fix):
 
 
 def test_cc_fixed_rounds_parity(spark):
-    """Exactly-K synchronous min-label rounds == numpy, mid-convergence."""
-    n, e = maxflow_graph()
-    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
-    for k in (1, 3):
-        got = vec(connected_components_fixed(g, iterations=k), "component", n)
-        exp = oracle.cc_min_label_fixed(n, e, iterations=k)
-        assert (got == exp).all(), k
+    """K frontier-driven min-label rounds == K synchronous full-frontier
+    rounds (numpy), mid-convergence: an unchanged label has nothing new
+    to send."""
+    for n, e in (maxflow_graph(), chain_graph(40)):
+        g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+        for k in (1, 3):
+            got = vec(connected_components(g, max_iterations=k), "component", n)
+            exp = oracle.cc_min_label_fixed(n, e, iterations=k)
+            assert (got == exp).all(), (n, k)
 
 
 @pytest.mark.parametrize(

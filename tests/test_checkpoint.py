@@ -15,6 +15,7 @@ from olive_spark.algorithms.bfs import bfs
 from olive_spark.algorithms.cc import connected_components
 from olive_spark.checkpoint import _LINEAGE_SCHEMA, CheckpointStore
 from olive_spark.fixtures import grid_graph, chain_graph
+import olive_spark.graph as graph_module
 from olive_spark.graph import Graph
 from olive_spark.metrics import SuperstepMetricsCollector
 
@@ -48,7 +49,7 @@ def test_superstep_shuffle_metrics(spark, tmp_path, monkeypatch):
     and in the CheckpointStore supersteps log. The compact loop layout
     is held off, so the run really is multi-partition (the 15-vertex
     grid would otherwise loop at P=1)."""
-    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
+    monkeypatch.setattr(graph_module, "LOOP_ROWS_PER_PARTITION", 1)
     n, e = grid_graph()
     g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
     store = CheckpointStore(spark, str(tmp_path / "ckpt_sh"), run_id="rsh")
@@ -303,7 +304,7 @@ def test_logged_metrics_are_settled(spark, tmp_path, monkeypatch):
     # the module, not the ``olive_spark.pregel`` function the package exports
     loop_core = importlib.import_module("olive_spark.pregel")
     monkeypatch.setattr(loop_core, "SuperstepMetricsCollector", Recording)
-    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
+    monkeypatch.setattr(graph_module, "LOOP_ROWS_PER_PARTITION", 1)
     n, e = grid_graph()
     g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
     store = CheckpointStore(spark, str(tmp_path / "ckpt_settled"), run_id="settled")

@@ -101,16 +101,16 @@ def test_dedup_clusters_method_validation(spark):
 
     docs = docs_df(spark, ["a", "b"])
     pairs = spark.createDataFrame(pd.DataFrame({"doc_a": [0], "doc_b": [1]}))
-    with pytest.raises(ValueError):
-        dedup_clusters(docs, pairs, method="nope")
-    with pytest.raises(ValueError):
-        dedup_clusters(docs, pairs, iterations=2, method="stars")
-    # explicit minlabel convergence path still works
-    got = {
-        r["doc_id"]: r["canonical_id"]
-        for r in dedup_clusters(docs, pairs, method="minlabel").collect()
-    }
-    assert got == {0: 0, 1: 0}
+    # there is no method option: iterations alone picks the operator
+    with pytest.raises(TypeError):
+        dedup_clusters(docs, pairs, method="stars")
+    # iterations=None -> star contraction, iterations=k -> k min-label rounds
+    for iterations in (None, 2):
+        got = {
+            r["doc_id"]: r["canonical_id"]
+            for r in dedup_clusters(docs, pairs, iterations=iterations).collect()
+        }
+        assert got == {0: 0, 1: 0}, iterations
 
 
 def test_ngram_counts(spark):

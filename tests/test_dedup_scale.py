@@ -37,7 +37,7 @@ def _run(spark, n_docs: int, chain_len: int = 5):
     )
     corpus = corpus.localCheckpoint(eager=True)
     pairs = minhash_near_duplicates(corpus, threshold=0.5, num_hashes=32, bands=16)
-    clusters = dedup_clusters(corpus, pairs, method="auto")
+    clusters = dedup_clusters(corpus, pairs)
     n_nonself = clusters.filter(F.col("canonical_id") != F.col("doc_id")).count()
     n_chains = n_chain_docs // chain_len
     assert n_nonself == n_chain_docs - n_chains

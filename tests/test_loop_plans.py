@@ -15,12 +15,13 @@ Jobs per step are counted from the scheduler's job ids, as the
 difference between two calls on warm layouts that differ by one step.
 
 The graphs are small in-repo fixtures at 4 partitions; the compact loop
-layout is held off (``OLIVE_LOOP_ROWS_PER_PARTITION=1``) so the pinned
+layout is held off (``graph.LOOP_ROWS_PER_PARTITION = 1``) so the pinned
 plans are the multi-partition shapes, not the 1-partition shortcut.
 """
 
 from __future__ import annotations
 
+import importlib
 import itertools
 import re
 
@@ -34,8 +35,12 @@ from olive_spark.algorithms.pagerank import pagerank, pagerank_fixed
 from olive_spark.algorithms.triangles import triangle_count
 from olive_spark.checkpoint import CheckpointStore
 from olive_spark.fixtures import chain_graph, grid_graph
+import olive_spark.graph as graph_module
 from olive_spark.graph import Graph
 from olive_spark.pregel import ACCUM, PregelProgram, pregel, src
+
+# the module, not the ``olive_spark.pregel`` function the package exports
+loop_core = importlib.import_module("olive_spark.pregel")
 
 _NODE = re.compile(r"^([\s:+|-]*)(?:\*(?:\(\d+\))?\s*)?([A-Za-z]+)")
 
@@ -116,7 +121,7 @@ def _jobs(spark, fn) -> int:
 @pytest.fixture(scope="module")
 def graphs(spark):
     with pytest.MonkeyPatch.context() as mp:
-        mp.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
+        mp.setattr(graph_module, "LOOP_ROWS_PER_PARTITION", 1)
         n, e = grid_graph(4, 6)
         grid = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
         n, e = chain_graph(30)
@@ -145,10 +150,10 @@ def test_pagerank_step_plan(spark, graphs):
 
 @pytest.mark.parametrize("threshold, join", [(10**9, "BroadcastHashJoin"),
                                              (-1, "ShuffledHashJoin")])
-def test_cc_step_plan(spark, graphs, threshold, join):
+def test_cc_step_plan(spark, graphs, threshold, join, monkeypatch):
     g = graphs["chain"].symmetrized()
-    res, plans = _snapshot_plans(spark, lambda: pregel(
-        g, _cc_program(), max_iterations=2, broadcast_threshold=threshold))
+    monkeypatch.setattr(loop_core, "BROADCAST_THRESHOLD", threshold)
+    res, plans = _snapshot_plans(spark, lambda: pregel(g, _cc_program(), max_iterations=2))
     res.free()
     assert join in plans[-1].split("\n\n")[0]
     # the broadcast is a BroadcastExchange, not a shuffle Exchange

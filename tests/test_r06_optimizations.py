@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import olive_spark.graph as graph_module
 from olive_spark.graph import Graph
 
 
@@ -113,6 +114,7 @@ def test_superstep_state_side_has_no_exchange(spark):
         PregelProgram,
         _build_superstep,
         _init_state,
+        _prepare_superstep_exprs,
         src,
         stable_partitioning,
     )
@@ -132,9 +134,8 @@ def test_superstep_state_side_has_no_exchange(spark):
             eager=False
         )
         state.count()
-        new_state = _build_superstep(
-            g.edges, state, prog, ["rank"], 64, 1_000_000, True
-        )
+        exprs = _prepare_superstep_exprs(prog, ["rank"], True)
+        new_state = _build_superstep(g.edges, state, prog, exprs, 64)
         plan = new_state._jdf.queryExecution().executedPlan().toString()
     # exactly one planner-inserted shuffle in the whole superstep (the
     # message aggregate); the cached edge relation's stored build plan
@@ -253,7 +254,7 @@ def test_shuffle_metrics_collected_lazily(spark, monkeypatch):
     # ring would compact to ONE partition, where the message aggregate
     # needs no exchange at all and shuffle_read_bytes is legitimately 0
     # — this test wants a real shuffle to assert the deferred fields on
-    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")
+    monkeypatch.setattr(graph_module, "LOOP_ROWS_PER_PARTITION", 1)
     g = Graph.from_edge_list(spark, _ring(12), n_vertices=12, num_partitions=4)
     res = pagerank_fixed(g, iterations=3)
     # loop finished without a single store read...
@@ -281,10 +282,10 @@ def test_loop_layout_hysteresis_and_memo(spark, monkeypatch):
     and graph.unpersist() cascades to it."""
     g = Graph.from_edge_list(spark, _ring(64), n_vertices=64, num_partitions=4)
     # target below E/2 per partition -> p > num_partitions//2 -> no-op
-    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "22")  # p=3 > 2
+    monkeypatch.setattr(graph_module, "LOOP_ROWS_PER_PARTITION", 22)  # p=3 > 2
     assert g.loop_layout() is g
     # default target -> p=1 <= 2 -> compact
-    monkeypatch.delenv("OLIVE_LOOP_ROWS_PER_PARTITION")
+    monkeypatch.undo()
     c = g.loop_layout()
     assert c is not g
     assert c.num_partitions == 1
@@ -305,13 +306,13 @@ def test_pregel_on_compact_layout_matches_uncompacted(spark, monkeypatch):
     from olive_spark.algorithms.pagerank import pagerank_fixed
 
     edges = _ring(50) + [(0, 25), (25, 0), (7, 7)]
-    monkeypatch.setenv("OLIVE_LOOP_ROWS_PER_PARTITION", "1")  # off
+    monkeypatch.setattr(graph_module, "LOOP_ROWS_PER_PARTITION", 1)  # off
     g1 = Graph.from_edge_list(spark, edges, n_vertices=50, num_partitions=4)
     r1 = pagerank_fixed(g1, iterations=8)
     plain = {row["id"]: row["rank"] for row in r1.state.collect()}
     r1.free(); g1.unpersist()
 
-    monkeypatch.delenv("OLIVE_LOOP_ROWS_PER_PARTITION")  # default: compacts
+    monkeypatch.undo()  # default: compacts
     g2 = Graph.from_edge_list(spark, edges, n_vertices=50, num_partitions=4)
     assert g2.loop_layout().num_partitions == 1
     r2 = pagerank_fixed(g2, iterations=8)

@@ -57,6 +57,19 @@ def test_sssp_unit_weights(spark, name, fix, source):
     assert (got == exp).all()
 
 
+def test_sssp_reuses_parent_loop_layout(spark):
+    """Unit-weight SSSP loops on the graph itself: the compact loop
+    layout it builds is memoized on the caller's graph, where the next
+    loop reuses it, instead of on a per-call wrapper graph."""
+    n, e = chain_graph(20)
+    g = Graph.from_edge_list(spark, e, n_vertices=n, num_partitions=4)
+    assert g._compact is None
+    res = sssp(g, source=0)
+    assert (vec(res, "distance", n) == oracle.sssp(n, e, 0)).all()
+    assert g._compact is not None and g._compact is g.loop_layout()
+    g.unpersist()
+
+
 def test_sssp_real_weights(spark):
     """General engine path: honor the edge table's weights."""
     from pyspark.sql import types as T
