@@ -380,8 +380,9 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pages_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full web ingest path on a synthesized page table encoding the
-    chain topology; returns per-page outlink counts. No SQL oracle
-    (Arrow-UDF extraction); rows-only check + pytest goldens."""
+    chain topology; returns per-page outlink counts (links from the
+    native href expression); checked against the closed-form
+    per-page degrees of the chain."""
     from olive_spark.fixtures import chain_graph
     from olive_spark.ingest.pages import synth_pages
     from olive_spark.ingest.resolve import build_graph_from_pages

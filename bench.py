@@ -20,7 +20,7 @@ local[$SPARK_GRAFT_CPUS] (default 32):
   workload the 100TB design point cares about; the headline
   edges/sec-per-superstep metric comes from this run.
 - cc_converged / labelprop3 / bfs / triangles over the tripartite graph.
-- ingest: synthetic page table -> Arrow-UDF link extraction ->
+- ingest: synthetic page table -> native link extraction ->
   resolved graph -> degrees (the production input path).
 
 Output: {"metric": "edges_per_sec_per_superstep", "value": N,

@@ -13,7 +13,8 @@ Re-expresses the capabilities of the reference GPU graph framework
   label propagation (GAS-style), and triangle counting
   (sorted-adjacency intersection — not GAS).
 - ``ingest``: Common-Crawl-style page table -> link extraction
-  (vectorized Arrow UDFs) -> resolved edge table.
+  (native JVM regex; text via vectorized Arrow UDFs) -> resolved edge
+  table.
 - ``pipeline``: large-scale training-data ops (dedup, similarity,
   text stats) over document/embedding tables.
 

@@ -25,7 +25,6 @@ from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, run_l
 def connected_components(
     graph: Graph,
     max_iterations: int | None = None,
-    symmetrize: bool = True,
     checkpoint_store=None,
     checkpoint_every: int = 1,
     resume: bool = False,
@@ -34,7 +33,7 @@ def connected_components(
     synchronous rounds with the same labels as k full-frontier rounds
     (``oracle.cc_min_label_fixed``): a vertex whose label did not change
     has nothing new to send."""
-    g = graph.symmetrized() if symmetrize else graph
+    g = graph.symmetrized()
     if max_iterations is None:
         max_iterations = graph.vertex_count() + 1
     program = PregelProgram(
@@ -61,7 +60,6 @@ def connected_components(
 def connected_components_stars(
     graph: Graph,
     max_rounds: int = 50,
-    symmetrize: bool = True,
     round_metrics: list | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
@@ -81,8 +79,11 @@ def connected_components_stars(
     order-insensitive checksum of the edge multiset, folded into the
     round's one barrier action.
 
-    Returns a DataFrame (id, component) — exact, same contract as
-    `connected_components(...).state`.
+    Returns a snapshot (id, component) — exact, same contract as
+    `connected_components(...).state`, and like it a materialized
+    ``localCheckpoint``: a caller that joins it back to tables sharing
+    scans with ``graph`` (``dedup_clusters`` joins it to the corpus its
+    pairs came from) gets no lineage re-run of the loop's input.
 
     round_metrics: optional caller-supplied list; one dict per
     contraction round is appended ({round, edges, ms}) so scale runs
@@ -100,10 +101,7 @@ def connected_components_stars(
 
     def init(g: Graph) -> DataFrame:
         e = g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        e = e.filter(F.col("u") != F.col("v"))
-        if symmetrize:
-            e = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        return canonical(e, g.num_partitions)
+        return canonical(e.filter(F.col("u") != F.col("v")), g.num_partitions)
 
     def large_star(df: DataFrame) -> DataFrame:
         # neighborhoods over BOTH directions; connect strictly-larger
@@ -152,8 +150,8 @@ def connected_components_stars(
     roots = res.state.groupBy("u").agg(F.min("v").alias("component")).select(
         F.col("u").alias("id"), "component"
     )
-    out = (
+    return (
         graph.vertices.join(roots, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
+        .localCheckpoint(eager=True)
     )
-    return out

@@ -38,14 +38,13 @@ from olive_spark.pregel import ACCUM, PregelProgram, PregelResult, pregel, src
 def label_propagation(
     graph: Graph,
     iterations: int = 10,
-    symmetrize: bool = True,
     checkpoint_store=None,
     checkpoint_every: int = 1,
     resume: bool = False,
 ) -> PregelResult:
     """Exactly `iterations` synchronous rounds; vertices with no
     neighbors keep their own label."""
-    g = graph.symmetrized() if symmetrize else graph
+    g = graph.symmetrized()
     program = PregelProgram(
         init={"label": F.col("id")},
         gather=src("label"),

@@ -75,6 +75,34 @@ def _read_header_line(spark: SparkSession, path: str, comment: str) -> list[str]
         stream.close()
 
 
+def number_rows(df: DataFrame, col: str) -> DataFrame:
+    """``df`` plus a long column ``col`` numbering its rows densely
+    0..N-1 in (partition, position) order, inside the JVM.
+
+    A row's position is ``monotonically_increasing_id()`` minus its
+    partition's base (the partition index sits in the id's upper 31
+    bits); its number is that position plus the partition's offset,
+    the running sum of the earlier partitions' sizes from ONE small
+    collect of per-partition counts (P longs), inlined as an array
+    literal. The tagged rows are cached so the count pass and the
+    numbering pass see the same partitions in the same order (a range
+    partitioner samples its bounds anew on every evaluation).
+    """
+    pid = F.spark_partition_id()
+    tagged = df.select(
+        "*",
+        pid.alias("_pid"),
+        (F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)).alias("_pos"),
+    ).cache()
+    counts = dict(tagged.groupBy("_pid").count().collect())
+    offsets, acc = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(p, 0)
+    base = F.array(*(F.lit(o) for o in offsets)).cast("array<long>")
+    return tagged.withColumn(col, base[F.col("_pid")] + F.col("_pos")).drop("_pid", "_pos")
+
+
 @dataclass
 class Graph:
     """A directed graph as a pair of DataFrames.
@@ -103,13 +131,12 @@ class Graph:
         edges: DataFrame,
         vertices: DataFrame | None = None,
         num_partitions: int | None = None,
-        partition: bool = True,
     ) -> "Graph":
-        """Build a Graph; optionally hash-partition+cache the edge table.
+        """Build a Graph: hash-partition + cache the edge table.
 
-        ``partition=True`` performs the one-time edge-cut placement:
-        ``repartition(n, src)`` — the Spark analogue of
-        Olive::readGraph's random edge-cut partitioning (olive.h:432-446).
+        The one-time edge-cut placement is ``repartition(n, src)`` — the
+        Spark analogue of Olive::readGraph's random edge-cut
+        partitioning (olive.h:432-446).
         """
         if num_partitions is None:
             num_partitions = spark.sparkContext.defaultParallelism
@@ -122,21 +149,17 @@ class Graph:
                 else F.lit(1.0)
             ).alias("weight"),
         )
-        if partition:
-            # Hash-partition by src: the one-time edge-cut placement.
-            # No sortWithinPartitions (r6): every consumer probes this
-            # layout through hinted broadcast/shuffled-hash joins (pregel
-            # full-frontier and large-frontier state, the weighted-
-            # pagerank wdeg join) — zero SortMergeJoin in any audited
-            # plan — so the per-partition E-row sort at build time only
-            # ever served a sort-merge fallback nothing takes (same
-            # finding that removed the symmetrized/reversed layout
-            # sorts).
-            edges = edges.repartition(num_partitions, "src").cache()
+        # No sortWithinPartitions: every consumer probes this layout
+        # through hinted broadcast/shuffled-hash joins (pregel state,
+        # the weighted-pagerank wdeg join), so a per-partition sort
+        # would only serve a sort-merge join nothing plans.
+        edges = edges.repartition(num_partitions, "src").cache()
         if vertices is None:
-            # Fallback when no explicit id space is given: union of endpoints.
-            # NOTE: misses isolated vertices — callers with a known id space
-            # (file header N, or a resolved url table) should pass `vertices`.
+            # Fallback when no explicit id space is given: union of the
+            # endpoints, read from the cached edge table (never from the
+            # caller's lineage). NOTE: misses isolated vertices — callers
+            # with a known id space (file header N, or a resolved url
+            # table) should pass `vertices`.
             vertices = (
                 edges.select(F.col("src").alias("id"))
                 .union(edges.select(F.col("dst").alias("id")))
@@ -240,50 +263,16 @@ class Graph:
         advances its vertex counter on every newline, csrGraph.h:203-206);
         dropping it would silently mis-number every later vertex.
 
-        Line-number -> vertex-id ranking is distributed: zipWithIndex for
-        global line order, then range-partition by line number + local
-        rank + broadcast per-partition offsets (the same technique as
-        ingest.resolve.assign_ids) — no single-partition global window.
+        Line-number -> vertex-id ranking is distributed and stays in the
+        JVM: :func:`number_rows` over the comment-filtered text scan,
+        whose partitions are the file's splits in file order — no
+        single-partition global window, no Python worker.
         """
-        if num_partitions is None:
-            num_partitions = spark.sparkContext.defaultParallelism
         header = _read_header_line(spark, path, comment="%")
         n_vertices = int(header[0])
-
-        lines = spark.read.text(path)
-        numbered = lines.rdd.zipWithIndex().toDF(["row", "line_no"])
         # keep blank lines (degree-0 vertices); drop only '%' comments
-        data = numbered.select(F.col("row.value").alias("value"), "line_no").filter(
-            ~F.col("value").startswith("%")
-        )
-        parted = data.repartitionByRange(num_partitions, "line_no").sortWithinPartitions(
-            "line_no"
-        )
-        # cache so the count pass and the rank pass see the same ranges
-        with_pid = parted.withColumn("_pid", F.spark_partition_id()).cache()
-        counts = {
-            r["_pid"]: r["cnt"]
-            for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-        }
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        boffsets = spark.sparkContext.broadcast(offsets)
-
-        def rank_partition(batches):
-            import pandas as pd
-
-            local = 0
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                base = boffsets.value.get(int(pdf["_pid"].iloc[0]), 0)
-                ranks = range(base + local, base + local + len(pdf))
-                local += len(pdf)
-                yield pd.DataFrame({"rank": list(ranks), "value": pdf["value"]})
-
-        ranked = with_pid.mapInPandas(rank_partition, schema="rank long, value string")
+        lines = spark.read.text(path).filter(~F.col("value").startswith("%"))
+        ranked = number_rows(lines, "rank")
         # rank 0 = header; rank k >= 1 = adjacency list of vertex k-1
         edges = (
             ranked.filter(F.col("rank") > 0)
@@ -324,8 +313,11 @@ class Graph:
             # repartition(P, id) was a redundant V-row exchange
             # (guide §2.4). Coalescing is pinned off for the build so
             # AQE cannot shrink deg's exchange out from under the
-            # co-partitioning.
-            with stable_partitioning(self.vertices.sparkSession):
+            # co-partitioning, and the shuffle width is pinned to P so
+            # the aggregate lands hash(id, P) by construction, not by
+            # the session width happening to equal P.
+            with stable_partitioning(self.vertices.sparkSession,
+                                     shuffle_partitions=self.num_partitions):
                 self._degrees = (
                     self.vertices.join(
                         deg.hint("shuffle_hash"), self.vertices.id == deg.src, "left"

@@ -1,10 +1,11 @@
 """Web-scale ingest: Common-Crawl-style pages -> link graph.
 
 The production-shaped input path per the north rule: an Iceberg/parquet
-table of web pages ``(url, warc_ts, html, text, lang)`` is parsed with
-vectorized Arrow UDFs (byte-identical extracted text per url), links
-are resolved into a salted, hash-partitioned edge DataFrame, and the
-Graph feeds the Pregel engine.
+table of web pages ``(url, warc_ts, html, text, lang)`` is parsed —
+links by one native regex expression in the JVM, text by vectorized
+Arrow UDFs (byte-identical extracted text per url) — links are resolved
+into a hash-partitioned edge DataFrame, and the Graph feeds the Pregel
+engine.
 """
 
 from olive_spark.ingest.extract import extract_links_df, extract_text_bytes, with_extracted_text

@@ -1,11 +1,22 @@
-"""HTML text + link extraction as vectorized Arrow UDFs.
+"""HTML link extraction in the JVM; text + anchor extraction as
+vectorized Arrow UDFs.
 
 The reference engine consumes pre-built edge lists
 (CsrGraph::fromEdgeListFile, csrGraph.h:106-171); at web scale the edge
-list must itself be derived from crawled pages. Per the input hint this
-happens with pandas/Arrow UDFs only — no per-row Python UDFs — and the
-text extractor must be byte-identical per url between the distributed
-run and the serial reference function (`extract_text_bytes`).
+list must itself be derived from crawled pages.
+
+- Link targets come from ONE native Column expression, :func:`hrefs`
+  (``regexp_extract_all`` over the html cast to a string): no Python
+  worker is started on the graph-build path. The pattern,
+  ``HREF_PATTERN``, is written down once; the serial reference
+  ``extract_links_bytes`` compiles the same string, and the tests pin
+  the two equal per url (order and duplicates included). One
+  difference is chosen and pinned: invalid UTF-8 inside an href comes
+  out as U+FFFD natively, where the serial reference raises.
+- Text and anchor text stay vectorized pandas/Arrow UDFs (no per-row
+  Python UDFs): their contract is byte-identity per url with the
+  serial reference functions (`extract_text_bytes`,
+  `extract_anchors_bytes`).
 
 Determinism: `extract_text_bytes` is a single pure function of the html
 bytes — no locale, no environment, no library version drift (stdlib
@@ -17,7 +28,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -25,7 +36,10 @@ _HEAD_RE = re.compile(rb"<head>.*?</head>", re.S)
 _SCRIPT_RE = re.compile(rb"<(script|style)\b.*?</\1>", re.S)
 _TAG_RE = re.compile(rb"<[^>]*>")
 _WS_RE = re.compile(rb"\s+")
-_HREF_RE = re.compile(rb'<a\s[^>]*href="([^"]+)"')
+#: the one href pattern: Java regex in :func:`hrefs`, bytes regex in
+#: the serial reference (``\s`` and ``[^>]`` mean the same in both)
+HREF_PATTERN = r'<a\s[^>]*href="([^"]+)"'
+_HREF_RE = re.compile(HREF_PATTERN.encode())
 
 
 def extract_text_bytes(html: bytes) -> str:
@@ -53,9 +67,15 @@ def _extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text_bytes)
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _extract_links_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_links_bytes)
+def hrefs(html: str) -> Column:
+    """All href targets of the binary ``html`` column, in document
+    order, duplicates kept — the JVM twin of ``extract_links_bytes``.
+
+    CAST, not ``decode``: under ANSI mode ``decode`` raises on any
+    invalid byte anywhere in the page, while the cast keeps the bytes
+    and the regex sees malformed sequences as U+FFFD.
+    """
+    return F.regexp_extract_all(F.col(html).cast("string"), F.lit(HREF_PATTERN), F.lit(1))
 
 
 def with_extracted_text(pages: DataFrame, out_col: str = "extracted_text") -> DataFrame:
@@ -68,19 +88,19 @@ def extract_links_df(pages: DataFrame) -> DataFrame:
     within a page only implicitly (duplicates preserved).
 
     Column pruning matters at 100TB: only (url, html) are read from the
-    scan; the explode happens after the Arrow batch extraction.
+    scan; the extraction and the explode run in the same JVM stage.
     """
     return (
-        pages.select("url", _extract_links_udf(F.col("html")).alias("hrefs"))
+        pages.select("url", hrefs("html").alias("hrefs"))
         .select(F.col("url").alias("src_url"), F.explode("hrefs").alias("dst_url"))
     )
 
 
 # --- anchor text (round 4) --------------------------------------------------
 # The per-link anchor text is the classic web ranking / query-expansion
-# signal; at 100 TB it is extracted in the same Arrow batch pass as the
-# link targets and aggregated per TARGET url with one map-side-combined
-# groupBy (no extra scan of the pages table).
+# signal; at 100 TB it is extracted in one Arrow batch pass that yields
+# each link target with its text, and aggregated per TARGET url with one
+# map-side-combined groupBy (no extra scan of the pages table).
 
 def extract_anchors_bytes(html: bytes) -> list[tuple[str, str]]:
     """(href, anchor_text) per <a>, document order, duplicates kept.

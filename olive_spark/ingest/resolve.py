@@ -4,8 +4,9 @@ Two id-assignment strategies:
 
 - ``sort``: id = rank of url in global lexicographic order (FIXTURES.md
   layer B). Deterministic and dense (0..N-1) — the reference's dense id
-  space (csrGraph.h:129-135). Costs a global sort + row_number; fine to
-  ~10^9 urls, the strategy used for oracle-comparable tests.
+  space (csrGraph.h:129-135). Costs a global sort + one collect of
+  per-partition counts; fine to ~10^9 urls, the strategy used for
+  oracle-comparable tests.
 - ``hash``: id = xxhash64(url) — shuffle-free, the 100TB path. It
   assumes no two urls share a hash (collision probability ~N^2/2^64,
   ≈3e-5 at 10^12 docs); nothing checks that, and a collision would
@@ -20,11 +21,11 @@ page set are dropped (dangling *targets* — distinct from dangling
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olive_spark.graph import Graph
-from olive_spark.ingest.extract import extract_links_df
+from olive_spark.graph import Graph, number_rows
+from olive_spark.ingest.extract import extract_links_df, hrefs
 
 
 def assign_ids(urls: DataFrame, method: str = "sort", num_partitions: int | None = None) -> DataFrame:
@@ -32,9 +33,10 @@ def assign_ids(urls: DataFrame, method: str = "sort", num_partitions: int | None
 
     - ``hash``: id = xxhash64(url), shuffle-free (the 10^12-doc path).
     - ``sort``: id = global lexicographic rank, dense 0..N-1, computed
-      scalably: range-partition by url, count per partition (one small
-      collect of P longs), then per-partition local rank + broadcast
-      offset — no single-partition window, O(N log N) distributed sort.
+      scalably: range-partition by url, sort within partitions, then
+      :func:`olive_spark.graph.number_rows` (one small collect of P
+      per-partition counts, numbering in the JVM) — no single-partition
+      window, O(N log N) distributed sort.
     """
     if method == "hash":
         return urls.select(F.xxhash64("url").alias("id"), "url")
@@ -43,34 +45,7 @@ def assign_ids(urls: DataFrame, method: str = "sort", num_partitions: int | None
         if num_partitions is None:
             num_partitions = spark.sparkContext.defaultParallelism
         parted = urls.repartitionByRange(num_partitions, "url").sortWithinPartitions("url")
-        # cache so the count pass and the ranking pass see the SAME range
-        # boundaries (RangePartitioner samples its bounds)
-        with_pid = parted.withColumn("_pid", F.spark_partition_id()).cache()
-        counts = {
-            r["_pid"]: r["cnt"]
-            for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-        }
-        offsets = {}
-        acc = 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        boffsets = spark.sparkContext.broadcast(offsets)
-
-        def rank_partition(batches):
-            import pandas as pd
-
-            local = 0
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                base = boffsets.value.get(int(pdf["_pid"].iloc[0]), 0)
-                ids = range(base + local, base + local + len(pdf))
-                local += len(pdf)
-                yield pd.DataFrame({"id": list(ids), "url": pdf["url"]})
-
-        out = with_pid.mapInPandas(rank_partition, schema="id long, url string")
-        return out
+        return number_rows(parted, "id").select("id", "url")
     raise ValueError(method)
 
 
@@ -110,10 +85,11 @@ def build_graph_from_pages(
     narrow (url, hrefs) projection) and both the vertex branch
     (distinct urls) and the edge branch (exploded links) read that
     snapshot — previously each branch recomputed the full pages
-    subtree, paying the Arrow link-extraction UDF (and, for synthetic
-    page tables, the page generation itself) twice. The heavy ``html``
-    column never crosses the Python boundary more than once and never
-    enters a shuffle.
+    subtree, paying the link extraction (and, for synthetic page
+    tables, the page generation itself) twice. The extraction is the
+    native :func:`olive_spark.ingest.extract.hrefs` expression, so the
+    graph build starts no Python worker, and the heavy ``html`` column
+    never enters a shuffle.
 
     With ``hash`` ids the (id, url) mapping is returned LAZILY (unlike
     ``sort``, which caches it): the graph build itself never reads urls,
@@ -129,9 +105,7 @@ def build_graph_from_pages(
     under the same no-collision assumption the hash id scheme itself
     already makes.
     """
-    extracted = pages.select(
-        "url", _extract_links_udf_col(pages)
-    ).localCheckpoint(eager=True)
+    extracted = pages.select("url", hrefs("html").alias("hrefs")).localCheckpoint(eager=True)
     links = extracted.select(
         F.col("url").alias("src_url"), F.explode("hrefs").alias("dst_url")
     )
@@ -182,15 +156,6 @@ def build_graph_from_pages(
         num_partitions=num_partitions,
     )
     return graph, vertices
-
-
-def _extract_links_udf_col(pages: DataFrame):
-    """hrefs column for the single-pass extraction above (kept out of
-    the module top level so extract.py stays the single home of the
-    UDFs)."""
-    from olive_spark.ingest.extract import _extract_links_udf
-
-    return _extract_links_udf(F.col("html")).alias("hrefs")
 
 
 def host_graph_edges(pages: DataFrame) -> DataFrame:

@@ -140,9 +140,9 @@ def minhash_signatures(
     bit-identical outputs) and came out at PARITY (1128s vs 1104s on
     the quiet-host pair): the stage is bound by the shared
     per-shingle hash+min compute, not the explode or the exchange.
-    Kept in scripts/minhash_formulation_ab.py as the zero-exchange
-    alternative for clusters where the ~N_docs-row signatures
-    shuffle matters.
+    BENCH.md records that formulation and its result; outputs are
+    bit-identical, so it remains a drop-in for clusters where the
+    ~N_docs-row signatures shuffle matters.
     """
     sh = shingles(docs, text_col, k=shingle_k)
     mins = [
@@ -474,12 +474,9 @@ def dedup_clusters(
         F.col("doc_b").cast("long").alias("dst"),
         F.lit(1.0).alias("weight"),
     )
-    members = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    g = Graph.from_edges(spark, edges, vertices=members)
+    # no vertices=: from_edges derives the member set from its cached
+    # edge table, so the caller's lazy pairs lineage runs once
+    g = Graph.from_edges(spark, edges)
     if iterations is None:
         comp = connected_components_stars(g, round_metrics=round_metrics)
     else:

@@ -6,10 +6,10 @@ SURVEY §1.3). What IS naturally streaming at web scale is INGEST: a
 crawler appends page batches continuously, and the edge table should
 grow incrementally without re-extracting old pages.
 
-``stream_pages_to_edges`` wires the exact same Arrow-UDF extraction
-used by the batch path (ingest/extract.py — one code path, no drift)
-into a readStream -> transform -> writeStream pipeline with
-exactly-once file-sink semantics; graph algorithms then run on the
+``stream_pages_to_edges`` wires the exact same native href expression
+used by the batch path (``ingest.extract.hrefs`` — one code path, no
+drift, no Python worker) into a readStream -> transform -> writeStream
+pipeline with exactly-once file-sink semantics; graph algorithms then run on the
 accumulated edge table at any point (micro-batch lambda architecture).
 
 ``streaming_link_rates`` is the monitoring side: windowed link-ingest
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olive_spark.ingest.extract import _extract_links_udf
+from olive_spark.ingest.extract import hrefs
 from olive_spark.ingest.pages import PAGES_SCHEMA
 
 
@@ -60,7 +60,7 @@ def stream_pages_to_edges(
     pages = reader.parquet(pages_dir)
     links = pages.select(
         F.col("url").alias("src_url"),
-        F.explode(_extract_links_udf(F.col("html"))).alias("dst_url"),
+        F.explode(hrefs("html")).alias("dst_url"),
     )
     edges = links.select(
         F.xxhash64("src_url").alias("src"),
@@ -86,7 +86,7 @@ def streaming_link_rates(
     """Windowed ingest monitoring: pages + extracted links per
     warc_ts window, tolerating late crawler flushes via watermark."""
     links = pages_stream.select(
-        "warc_ts", F.size(_extract_links_udf(F.col("html"))).alias("n_links")
+        "warc_ts", F.size(hrefs("html")).alias("n_links")
     )
     return (
         links.withWatermark("warc_ts", watermark)

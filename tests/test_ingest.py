@@ -1,25 +1,30 @@
-"""Ingest: page synthesis -> Arrow-UDF extraction -> resolved graph.
+"""Ingest: page synthesis -> extraction -> resolved graph.
 
-Validates the byte-identical-text invariant (input_hint) and that a
-topology realized as hyperlinks round-trips through the full ingest to
-the same algorithm results as the direct edge table (FIXTURES.md §B).
+Validates the byte-identical-text invariant (input_hint), that the
+native href expression equals the serial link extractor, that the
+graph-build plans start no Python worker, and that a topology realized
+as hyperlinks round-trips through the full ingest to the same algorithm
+results as the direct edge table (FIXTURES.md §B).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from olive_spark import oracle
 from olive_spark.algorithms.pagerank import pagerank_fixed
 from olive_spark.fixtures import ordered_graph_9, grid_graph
+from olive_spark.graph import Graph
 from olive_spark.ingest.extract import (
     extract_links_bytes,
     extract_text_bytes,
     extract_links_df,
+    hrefs,
     with_extracted_text,
 )
 from olive_spark.ingest.pages import synth_pages, url_of
-from olive_spark.ingest.resolve import build_graph_from_pages
+from olive_spark.ingest.resolve import assign_ids, build_graph_from_pages
 from olive_spark.ingest.resolve import testdata_graph as _testdata_graph
 
 from pyspark.sql import functions as F
@@ -64,6 +69,121 @@ def test_link_extraction_order_and_dups(spark):
         "https://a.example/2",
         "https://a.example/1",
     ]
+
+
+# html edge cases: every whitespace byte \s matches (tab, newline, VT,
+# FF, CR), case-sensitive tag and attribute names, single-quoted and
+# empty hrefs (no match), data-href (matches: the pattern only needs
+# `href="` after `<a` + whitespace), non-ASCII hrefs, order and duplicates
+_HREF_CORPUS = [
+    b'<a href="u1">x</a><a href="u2">y</a><a href="u1">z</a>',
+    b'<a\thref="tab"><a\nhref="nl"><a\x0bhref="vt"><a\x0chref="ff"><a\rhref="cr">',
+    b'<A HREF="upper"><a HREF="upper-attr"><A href="upper-tag"><a href="lower">',
+    b"<a href='single'><a href=\"\"><a href=\"ok\">",
+    b'<a data-href="data"><a class="c"\n  href="multi-line">',
+    "<a href=\"https://b\u00fccher.example/\u00e9t\u00e9\">caf\u00e9</a>".encode("utf-8"),
+    b'<p>no links at all</p>',
+    b'',
+    b'<a href="unterminated><a href="next">',
+    "\u2603<a href=\"after-snowman\">".encode("utf-8"),
+]
+
+
+def _hrefs_by_url(pages):
+    return {r["url"]: list(r["h"]) for r in pages.select("url", hrefs("html").alias("h")).collect()}
+
+
+def test_native_hrefs_equal_serial_reference(spark):
+    """hrefs(html) == extract_links_bytes per url, order and duplicates
+    kept, on the edge-case corpus and on synthesized pages."""
+    pages = spark.createDataFrame(
+        [(f"u{i}", html) for i, html in enumerate(_HREF_CORPUS)], "url string, html binary"
+    )
+    got = _hrefs_by_url(pages)
+    want = {f"u{i}": extract_links_bytes(html) for i, html in enumerate(_HREF_CORPUS)}
+    assert got == want
+    assert any(len(v) > len(set(v)) for v in want.values())  # duplicates exercised
+
+    n = 40
+    e = [(i, (i * 7 + 3) % n) for i in range(n)] + [(i, (i + 1) % n) for i in range(0, n, 3)] * 2
+    synth = synth_pages(spark, n, e, num_partitions=4)
+    want = {r["url"]: extract_links_bytes(bytes(r["html"])) for r in synth.select("url", "html").collect()}
+    assert _hrefs_by_url(synth) == want
+    assert sum(map(len, want.values())) == len(e)
+
+
+def test_native_hrefs_invalid_utf8_inside_href(spark):
+    """The one chosen difference: invalid UTF-8 inside an href becomes
+    U+FFFD natively (the html is CAST, not decoded), while the serial
+    reference raises. Invalid bytes elsewhere do not disturb matching."""
+    html = b'\xff\xfe<a href="bad\xffbyte">x</a><a href="fine">y</a>'
+    with pytest.raises(UnicodeDecodeError):
+        extract_links_bytes(html)
+    pages = spark.createDataFrame([("u", html)], "url string, html binary")
+    assert _hrefs_by_url(pages) == {"u": ["bad\ufffdbyte", "fine"]}
+
+
+def test_sort_ids_dense_at_several_partitions(spark):
+    """assign_ids(sort) numbers urls 0..N-1 in lexicographic order when
+    the range partitioning spreads them over >= 3 partitions."""
+    import random
+
+    rng = random.Random(11)
+    urls = sorted({f"https://h{rng.randrange(50)}.example/{rng.random():.12f}" for _ in range(500)})
+    shuffled = urls[:]
+    rng.shuffle(shuffled)
+    df = spark.createDataFrame([(u,) for u in shuffled], "url string")
+    ids = assign_ids(df, method="sort", num_partitions=5)
+    rows = ids.select("id", "url", F.spark_partition_id().alias("p")).collect()
+    assert len({r["p"] for r in rows}) >= 3
+    assert sorted((r["id"], r["url"]) for r in rows) == list(enumerate(urls))
+
+
+def _python_exec_nodes(df) -> list[str]:
+    """Nodes of df's executed plan (cached plans included) that run
+    Python: Python/pandas/Arrow eval and map operators, and scans of
+    RDDs built in Python (rdd.toDF and friends, whose lineage holds a
+    PythonRDD)."""
+    found = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if "Python" in name or "Pandas" in name or "Arrow" in name:
+            found.append(name)
+        if name == "RDDScanExec" and "PythonRDD" in node.rdd().toDebugString():
+            found.append(f"{name}(PythonRDD)")
+        for kids in (node.children(), node.innerChildren()):
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_graph_build_plans_start_no_python(spark, tmp_path):
+    """The link table, the sort-id table and the DIMACS edge table are
+    built in the JVM alone (pages read from parquet, so the synthetic
+    generator's own mapInPandas is not in the plans)."""
+    n = 30
+    e = [(i, (i * 5 + 1) % n) for i in range(n)]
+    synth_pages(spark, n, e, num_partitions=3).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    graph, vertices = build_graph_from_pages(spark, pages, id_method="sort", num_partitions=3)
+    dimacs = tmp_path / "g.dimacs"
+    dimacs.write_text("% c\n3 2\n2\n1 3\n2\n")
+    tables = {
+        "links": extract_links_df(pages),
+        "sort_ids": assign_ids(pages.select("url").distinct(), method="sort", num_partitions=3),
+        "ingest_vertices": vertices,
+        "ingest_edges": graph.edges,
+        "dimacs_edges": Graph.from_dimacs_file(spark, str(dimacs), num_partitions=2).edges,
+    }
+    for name, df in tables.items():
+        df.count()
+        assert _python_exec_nodes(df) == [], name
+    # the check itself sees a Python operator when one is there
+    assert _python_exec_nodes(with_extracted_text(pages))
+    assert graph.edge_count() == n
 
 
 def test_ingest_roundtrip_pagerank(spark):

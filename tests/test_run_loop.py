@@ -77,6 +77,24 @@ def test_nested_degrees_scope_restores_outer_conf(spark, outer_conf):
     g.unpersist()
 
 
+def test_degrees_cached_on_graph_width(spark, outer_conf):
+    """Graph.degrees() pins the shuffle width to the graph's P: the
+    cached table is hash(id, P) by construction even when the session
+    width (5 here, AQE on) is not P and the edge table is not laid out
+    by src, so the out-degree aggregate has to exchange."""
+    from pyspark.sql import functions as F
+
+    p = 3
+    edges = spark.range(30).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 30).alias("dst"), F.lit(1.0).alias("weight")
+    )
+    g = Graph(vertices=spark.range(30).repartition(p, "id").cache(), edges=edges, num_partitions=p)
+    deg = g.degrees()
+    placed = deg.select("outdeg", (F.spark_partition_id() == F.pmod(F.hash("id"), F.lit(p))).alias("ok"))
+    assert [tuple(r) for r in placed.distinct().collect()] == [(1, True)]
+    g.unpersist()
+
+
 def test_loop_records_share_one_key_set(spark):
     """pregel programs and k-core report the same per-step record, and
     a step whose plan an earlier step compiled compiles no class."""

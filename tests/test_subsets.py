@@ -86,6 +86,53 @@ def test_dimacs_partition_count_invariance(spark, tmp_path):
     assert len(e1) == 2 * m
 
 
+def test_dimacs_numbering_invariant_to_file_splits(spark, tmp_path):
+    """The vertex of a line is its rank among the non-comment lines in
+    file order, however many splits the text scan reads the file in:
+    numbering runs in (partition, position) order, and the splits of
+    one file are its partitions in file order. Comments sit between
+    data lines and blank lines are degree-0 vertices, so a mis-ordered
+    or mis-offset split shifts every later id."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(3)
+    n = 80
+    adj = {i: set() for i in range(1, n + 1)}
+    for _ in range(120):
+        a, b = rng.sample(range(1, n + 1), 2)
+        adj[a].add(b)
+        adj[b].add(a)
+    m = sum(len(v) for v in adj.values()) // 2
+    lines = ["% leading comment", f"{n} {m}"]
+    for i in range(1, n + 1):
+        if i % 17 == 0:
+            lines.append(f"% comment before vertex {i}")
+        lines.append(" ".join(str(x) for x in sorted(adj[i])))
+    p = tmp_path / "split.dimacs"
+    p.write_text("\n".join(lines) + "\n")
+    want = sorted((i - 1, j - 1) for i in adj for j in adj[i])
+
+    def edges():
+        g = Graph.from_dimacs_file(spark, str(p), num_partitions=3)
+        return sorted((r["src"], r["dst"]) for r in g.edges.collect())
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1g")
+    try:
+        assert spark.read.text(str(p)).select(F.spark_partition_id()).distinct().count() == 1
+        one = edges()
+        spark.conf.set(key, "128")
+        splits = spark.read.text(str(p)).select(F.spark_partition_id()).distinct().count()
+        assert splits >= 3
+        many = edges()
+    finally:
+        spark.conf.set(key, old)
+    assert one == many == want
+
+
 def test_edge_list_file_rejects_directories(spark, tmp_path):
     import pytest
 
